@@ -155,7 +155,7 @@ def q_price_chart_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     endswith('_C7') predicate now reaches the parquet reader as a
     StringEndsWith pushed filter (EXPLAIN.md §stored-serving makes the
     pushdown claim auditable). The anchored time-range half stays a
-    post-scan join filter by design: its bound is computed from the
+    post-scan window filter by design: its bound is computed from the
     data (max timestamp), not a literal. Values = price_chart exactly;
     the storage write is an eager build step, stamped in bench
     build_sec. At scale this IS the architecture: serving queries hit

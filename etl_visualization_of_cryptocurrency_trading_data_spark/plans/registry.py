@@ -1102,7 +1102,7 @@ SELECT * FROM (VALUES
   ('coin_market_cap', 3, 1, 1, 0, 0),
   ('gopher_rules', 0, 0, 0, 0, 0),
   ('media_metadata', 0, 0, 0, 0, 0),
-  ('price_chart', 1, 1, 1, 0, 0),
+  ('price_chart', 1, 0, 0, 0, 0),
   ('url_dedup', 2, 0, 0, 0, 0)
 ) AS t(query, n_shuffles, n_broadcasts, n_broadcast_joins,
        n_sortmerge_joins, n_window_group_limits)""",

@@ -9,14 +9,15 @@ predicate pushdown / column pruning / broadcast joins all apply
 
 Time-range filters are anchored at the data's max timestamp rather than
 wall-clock now() so results are deterministic (the reference anchors at
-datetime.now(), flask/app.py:39,93); the anchor is computed as a 1-row
-aggregate broadcast back into the filter — one declarative plan, no
-driver round-trip, no two-query race (reference defect SURVEY §2.11.5).
+datetime.now(), flask/app.py:39,93); the anchor is a window max over the
+symbol-filtered rows — one declarative plan, no driver round-trip, no
+two-query race (reference defect SURVEY §2.11.5), and no second job to
+aggregate and broadcast it back.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.latest import latest_per_group
@@ -25,12 +26,27 @@ from ..operators.latest import latest_per_group
 TIME_RANGE_HOURS = {"1h": 1, "1d": 24, "1w": 24 * 7, "1m": 24 * 30, "1y": 24 * 365}
 
 
-def _within_range(df: DataFrame, time_range: str, ts_col: str = "timestamp") -> DataFrame:
-    """timestamp > max(timestamp) - range  (P6, anchored deterministically)."""
+def _within_range(
+    df: DataFrame, symbol: str, time_range: str, ts_col: str = "timestamp"
+) -> DataFrame:
+    """One symbol's rows with timestamp > max(timestamp) - range  (P6,
+    anchored deterministically).
+
+    The anchor is the newest timestamp of the symbol across all
+    exchanges: a max over a window partitioned by coin_id's symbol
+    suffix, which is one value on every row left by ``_for_symbol``. So
+    the window has a single partition, and after the pushed
+    StringEndsWith filter it holds one symbol's rows. A symbol with no
+    rows gives an empty frame, and a null timestamp never passes the
+    filter. (An empty ``partitionBy()`` would do the same but logs a
+    no-partition warning on every request.)
+    """
     hours = TIME_RANGE_HOURS[time_range]
-    anchor = df.agg(F.max(ts_col).alias("_anchor"))
+    suffix = F.substring_index("coin_id", "_", -1)
+    anchor = F.max(ts_col).over(Window.partitionBy(suffix))
     return (
-        df.join(F.broadcast(anchor))
+        _for_symbol(df, symbol)
+        .withColumn("_anchor", anchor)
         .filter(F.col(ts_col) > F.col("_anchor") - F.expr(f"INTERVAL {hours} HOURS"))
         .drop("_anchor")
     )
@@ -49,14 +65,14 @@ def price_chart(price: DataFrame, symbol: str, time_range: str) -> DataFrame:
     Tidy rows (exchange, timestamp, price, volume); the per-exchange
     trace pivot (A3) is presentation, left to the client.
     """
-    return _within_range(_for_symbol(price, symbol), time_range).select(
+    return _within_range(price, symbol, time_range).select(
         "exchange", "timestamp", "price", "volume"
     )
 
 
 def ohlc_chart(ohlc: DataFrame, symbol: str, time_range: str) -> DataFrame:
     """Candlestick frame for one coin (flask/app.py:78-140)."""
-    return _within_range(_for_symbol(ohlc, symbol), time_range).select(
+    return _within_range(ohlc, symbol, time_range).select(
         "exchange", "timestamp", "open", "high", "low", "close"
     )
 

@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Routing by column presence, first match wins — reference
 # spark-streaming.py:121-132 (minus its dead ema_20 branch).
@@ -139,7 +140,7 @@ def upsert_by_key(
     spark = df.sparkSession
     tagged = df.withColumn("_pref", F.lit(0))
     if os.path.isdir(path):
-        existing = spark.read.parquet(path).withColumn("_pref", F.lit(1))
+        existing = read_table(spark, base_dir, table).withColumn("_pref", F.lit(1))
         tagged = tagged.unionByName(existing)
     # Newest order_col wins; the batch row (_pref=0) wins exact ties.
     # order_col must come FIRST — preferring the batch outright would
@@ -249,10 +250,46 @@ def compact_table(
     )
 
 
+# Inferred schema per table directory (absolute path), with the
+# directory's (st_ino, st_mtime_ns) at inference time. See read_table.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
 def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
-    df = spark.read.option("basePath", table_dir(base_dir, table)).parquet(
-        table_dir(base_dir, table)
-    )
+    """Read a table written by the writers above.
+
+    Parquet schema inference always runs as a Spark job, and on a small
+    serving read that job costs more than the scan. So the first read of
+    a table directory in this process infers the schema, and later reads
+    pass the remembered ``StructType`` to ``spark.read.schema`` (Spark
+    then only lists files). The entry is keyed on the directory's
+    absolute path and is valid while the directory's
+    ``(st_ino, st_mtime_ns)`` is unchanged. Every writer here changes
+    that: a new ``exchange=``/``batch_epoch=`` partition directory, the
+    ``_temporary``/``_SUCCESS`` churn of any Spark append, and the
+    directory swap of ``upsert_by_key``/``compact_table`` all modify the
+    top-level directory, and the next read infers afresh.
+
+    Blind spot: a foreign writer that rewrites files inside an existing
+    partition with a new schema, without touching the table directory,
+    goes unnoticed. Inference reads a single footer, so it never saw
+    such a change reliably either.
+    """
+    path = os.path.abspath(table_dir(base_dir, table))
+    # Stamp before inferring: a rewrite that races the inference leaves
+    # an entry whose stamp no longer matches, so it is never served.
+    try:
+        st = os.stat(path)
+        stamp = (st.st_ino, st.st_mtime_ns)
+    except FileNotFoundError:  # Spark raises its own error for a missing table
+        stamp = None
+    reader = spark.read.option("basePath", path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        df = reader.schema(hit[1]).parquet(path)
+    else:
+        df = reader.parquet(path)
+        _SCHEMAS[path] = (stamp, df.schema)
     if "batch_epoch" in df.columns:  # epoch bookkeeping, not user data
         df = df.drop("batch_epoch")
     return df

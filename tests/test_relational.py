@@ -941,3 +941,71 @@ def test_price_chart_stored_pushes_endswith_into_scan(spark):
     )
     assert len(a) > 0
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_chart_ranges_match_oracle_over_stored_tables(spark, tmp_path):
+    """price_chart and ohlc_chart over sink-written tables, for every
+    time range and for a symbol with no rows, equal the registry's
+    oracle SELECT with the symbol and range substituted (the registry
+    itself pins only C7/1w). The range anchor is a window max with a
+    non-empty partition spec: no broadcast aggregate, no
+    no-partition-window warning."""
+    import duckdb
+
+    from conftest import SF_SMOKE
+    from test_oracle_parity import assert_frames_match
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark import sinks
+    from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import load_table
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators import derive
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans import serving
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.oracles import (
+        serving as oracle_sql,
+    )
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.registry import ORACLES
+
+    store = str(tmp_path / "store")
+    price = derive.price_data(load_table(spark, SF_SMOKE, "events"))
+    tables = {"price_chart": "price_data", "ohlc_chart": "ohlc_data"}
+    sinks.write_table(price, store, "price_data")
+    sinks.write_table(derive.ohlc_data(price), store, "ohlc_data")
+    con = duckdb.connect()
+    for table in tables.values():
+        con.sql(f"CREATE TABLE {table} AS SELECT * FROM read_parquet("
+                f"'{store}/{table}/*/*.parquet', hive_partitioning = true)")
+    ctes = {"price_chart": oracle_sql.PRICE_DATA_CTE, "ohlc_chart": oracle_sql.OHLC_CTE}
+    sizes = {route: set() for route in tables}
+    for route, table in tables.items():
+        select = ORACLES[route].split(ctes[route], 1)[1]
+        for symbol in ("C7", "C999999"):
+            for time_range, hours in serving.TIME_RANGE_HOURS.items():
+                got = getattr(serving, route)(
+                    sinks.read_table(spark, store, table), symbol, time_range
+                )
+                got_pdf = got.toPandas()
+                sql = (select.replace("'_C7'", f"'_{symbol}'")
+                       .replace("INTERVAL 168 HOURS", f"INTERVAL {hours} HOURS"))
+                assert_frames_match(got_pdf, con.sql(sql).df(),
+                                    f"{route}({symbol}, {time_range})")
+                if symbol == "C999999":
+                    assert got_pdf.empty
+                else:
+                    sizes[route].add(len(got_pdf))
+                plan = got._jdf.queryExecution().executedPlan().toString()
+                # an empty partition spec renders as
+                # windowspecdefinition(specifiedwindowframe(...))
+                assert "windowspecdefinition(" in plan, plan
+                assert "windowspecdefinition(specifiedwindowframe" not in plan, plan
+                assert "Broadcast" not in plan, plan
+    con.close()
+    # the ranges really cut: each route returns at least two row counts
+    assert all(len(n) > 1 for n in sizes.values()), sizes
+
+    # a null timestamp never passes, and never becomes the anchor
+    nulls = spark.createDataFrame(
+        [("a_X", "a", "2024-01-02 00:00:00", 1.0), ("b_X", "b", None, 2.0),
+         ("a_X", "a", "2024-01-01 23:30:00", 3.0), ("a_X", "a", "2024-01-01 22:00:00", 4.0)],
+        "coin_id string, exchange string, timestamp string, price double",
+    ).withColumn("timestamp", F.to_timestamp("timestamp")).withColumn("volume", F.lit(0.0))
+    got = serving.price_chart(nulls, "X", "1h").select("price").collect()
+    assert sorted(r.price for r in got) == [1.0, 3.0]

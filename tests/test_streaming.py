@@ -6,6 +6,7 @@ triggers with real checkpoints."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -545,6 +546,58 @@ def test_compact_table_preserves_rows_and_shrinks_files(spark, tmp_path, price_d
     assert got.sort_values(key).reset_index(drop=True).equals(
         expected.sort_values(key).reset_index(drop=True)
     )
+
+
+def test_read_table_schema_cache_follows_every_rewrite(spark, tmp_path, price_df):
+    """read_table remembers a table's inferred schema, so a repeat read
+    launches no Spark job; every rewrite of the table directory (a new
+    partition, an upsert, a compaction, a delete-and-rewrite with an
+    extra column) makes the next read infer afresh. After each step the
+    schema and rows equal a fresh spark.read.parquet inference."""
+    base = str(tmp_path / "warehouse")
+    path = sinks.table_dir(base, "price_data")
+    sc = spark.sparkContext
+    exchanges = sorted(r[0] for r in price_df.select("exchange").distinct().collect())
+
+    def jobs_of_read(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            df = sinks.read_table(spark, base, "price_data")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def check(step: str) -> None:
+        got, jobs = jobs_of_read(f"read_table_cache-{step}-miss")
+        assert jobs >= 1, step  # the directory changed: schema inferred again
+        fresh = spark.read.option("basePath", path).parquet(path)
+        assert got.schema == fresh.schema, step
+        key = sorted(fresh.columns)
+        assert got.toPandas()[key].sort_values(key).reset_index(drop=True).equals(
+            fresh.toPandas()[key].sort_values(key).reset_index(drop=True)
+        ), step
+        again, jobs = jobs_of_read(f"read_table_cache-{step}-hit")
+        assert jobs == 0, step
+        assert again.schema == fresh.schema, step
+
+    sinks.write_table(price_df.filter(F.col("exchange") != exchanges[0]), base, "price_data")
+    check("first-read")
+    sinks.write_table(price_df.filter(F.col("exchange") == exchanges[0]), base, "price_data")
+    check("new-exchange-partition")
+    newest = price_df.groupBy("coin_id", "exchange").agg(F.max("timestamp").alias("timestamp"))
+    sinks.upsert_by_key(
+        price_df.join(newest, ["coin_id", "exchange", "timestamp"])
+        .withColumn("price", F.col("price") + 1.0),
+        base, "price_data",
+    )
+    check("upsert")
+    sinks.compact_table(spark, base, "price_data", target_rows_per_file=10_000)
+    check("compact")
+    shutil.rmtree(path)
+    sinks.write_table(price_df.withColumn("extra", F.lit(1)), base, "price_data")
+    check("rewrite-with-extra-column")
+    assert "extra" in sinks.read_table(spark, base, "price_data").columns
 
 
 def test_corrupt_envelope_dead_letter(spark, tmp_path):
