@@ -49,13 +49,7 @@ def pinned_small_loop(
     ``n_rows``) while the body runs iff ``n_rows < threshold``; yield
     whether the pin engaged. Always restores the prior conf values,
     including the unset state."""
-    import os
-
-    if n_rows >= threshold or os.environ.get(
-        "SPARK_GRAFT_LOOP_PIN", "on"
-    ).lower() in ("off", "0", "false"):
-        # SPARK_GRAFT_LOOP_PIN=off is the A/B escape hatch: identical
-        # code path, session confs untouched
+    if n_rows >= threshold:
         yield False
         return
     partitions = max(1, min(int(n_rows // rows_per_partition) + 1, cap))

@@ -609,18 +609,10 @@ def _curation_stages(
     # trade (executor loss here means recompute-from-scratch; at
     # 100 TB the docstring's parquet materialization between stages is
     # the durable form of the same boundary). Values unchanged.
-    # SPARK_GRAFT_CURATION_CKPT=off restores the persist form (A/B
-    # escape hatch, the SPARK_GRAFT_LOOP_PIN pattern).
-    import os
-
-    _ckpt = os.environ.get(
-        "SPARK_GRAFT_CURATION_CKPT", "on"
-    ).lower() not in ("off", "0", "false")
-
     def _stage(df: DataFrame) -> DataFrame:
         if not persist_intermediate:
             return df
-        return df.localCheckpoint(eager=True) if _ckpt else df.persist()
+        return df.localCheckpoint(eager=True)
 
     cols = ["doc_id", "text", "lang", "source"]
     quality = _stage(quality)
@@ -665,10 +657,8 @@ def _curation_stages(
     # downstream analysis O(k); values unchanged (the checkpoint
     # materializes exactly the rows the first BPE action materialized
     # anyway). At 100 TB k stays human-scale (the resample target), so
-    # the single-node materialization this implies is free. Same
-    # SPARK_GRAFT_CURATION_CKPT=off hatch as the stage boundaries.
-    if _ckpt:
-        selected = selected.localCheckpoint(eager=True)
+    # the single-node materialization this implies is free.
+    selected = selected.localCheckpoint(eager=True)
     return pack_chunks_bpe(selected, rounds=rounds, budget=budget)
 
 

@@ -23,13 +23,28 @@ Reference -> engine mapping:
 Scale notes: the only stateful operators are the watermarked window
 aggregation and applyInPandasWithState — both shard state by key
 across executors via the shuffle; watermarks bound state size. The
-foreachBatch fan-out adds zero extra source reads.
+foreachBatch fan-out adds zero extra source reads. The
+``*_stream_replay`` functions are evidence machinery, not an ingest
+path: one harness (``_replay``) spools each feed once as local
+parquet, sizes state partitions from the spooled bytes (one per
+~64 MB), and keeps small results on the driver (memory sink) and
+large ones executor-side (parquet or ``foreachBatch`` sinks); every
+tempdir, sink view and conf pin is released before a replay returns.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import threading
+import time
+import uuid
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from .. import sinks
 
@@ -39,6 +54,7 @@ PRICE_SCHEMA = (
     "coin_id string, exchange string, timestamp timestamp, "
     "price double, volume double"
 )
+PRICE_COLS = ["coin_id", "exchange", "timestamp", "price", "volume"]
 
 
 def read_price_stream(spark: SparkSession, spool_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -333,8 +349,6 @@ def run_full_pipeline(
     in the same foreachBatch) trades per-query checkpoints/watermarks
     for one source read — both are offered, pick per deployment.
     """
-    import os
-
     def src():
         return read_price_stream(spark, spool_dir)
 
@@ -399,313 +413,288 @@ def run_ingest(
     return writer.start()
 
 
-def vwap_stream_replay(
-    spark: SparkSession, price: DataFrame, timeout_s: int = 600
+# --- Stream replays ---------------------------------------------------------
+# Each *_stream_replay function gives the streaming path a driver-side
+# oracle-hash row; ``_replay`` owns the shared lifecycle and its contract.
+
+_CANDLES = (
+    "coin_id string, exchange string, timestamp timestamp,"
+    " open double, high double, low double, close double"
+)
+_SPREADS = (
+    "symbol string, ts_a timestamp, price_a double,"
+    " ts_b timestamp, price_b double, spread double"
+)
+_NOT_SENTINEL = "coin_id != '__sentinel__'"
+#: most parquet files one spooled feed frame is written as
+_SPOOL_FILES = 4
+
+
+def _with_sentinel(
+    frame: DataFrame, hi, keys=(("__sentinel__", "__sentinel__"),)
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[vwap_stream]], returned as a
-    plain batch DataFrame so the STREAMING path earns a driver-side
-    oracle-hash row (the pytest suite pins batch===stream bit-exactness;
-    this makes the same evidence driver-checkable).
-
-    Mechanics: the price feed is spooled to a temp dir as parquet, plus
-    one far-future sentinel tick (+72 h) in a second file; a file-stream
-    → watermarked tumbling VWAP (delay=0) runs to completion under
-    ``availableNow``, emitting into a memory sink. The sentinel pushes
-    the final watermark past every REAL window, so append mode emits
-    exactly the batch VWAP of the real feed — the sentinel's own
-    still-open window is the only one withheld, and its rows are
-    excluded by key. Oracle = the same SQL as ``vwap_hourly``.
-
-    NOTE the streaming job runs at BUILD time (a stream cannot be
-    packaged as a lazy batch plan); a bench timing of the returned
-    frame measures only the memory-sink scan. Empty input short-
-    circuits to an empty frame (no stream to run, nothing to emit).
-    """
-    import os
-    import tempfile
-    import uuid
-    from datetime import timedelta
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " vwap double, total_volume double, n_ticks bigint"
-    )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="vwap_replay_")
-    name = f"vwap_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            vwap_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "vwap", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
-
-def _spool_partitions(spark: SparkSession, spool: str) -> int:
-    """Shuffle/state partition count for a spool replay, derived from
-    the spooled feed's ON-DISK byte size (OPTIMIZATION_r14, guide §2.2:
-    partitioning follows measured data size, never the local core
-    count). Structured Streaming pins the stateful-operator partition
-    count to ``spark.sql.shuffle.partitions`` at query start and AQE
-    never applies to streaming plans, so the session default (sized
-    for batch) made every micro-batch run 32 state-store tasks over a
-    few MB of feed — pure task/commit overhead, multiplied by the
-    per-store quadruple of a stream-stream join. One ~64 MB-of-parquet
-    state partition is the same sizing rule a production stream would
-    use for its key space; the cap keeps a huge spool at the session's
-    configured parallelism."""
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(spool):
-        for f in files:
-            if f.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return int(max(1, min(total // (64 << 20) + 1, cap)))
-
-
-class _stream_shuffle_pin:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` to a
-    derived value while a replay query starts and drains (the stream's
-    cloned session captures the conf at start), restore on exit. The
-    replay builders are sequential (bench/driver/pytest), so the
-    session-global conf write cannot race another query.
-
-    Also pins ``spark.sql.streaming.minBatchesToRetain`` to 2 for the
-    drain (OPTIMIZATION_r15, measured ~4% on the 36-trigger restfeed
-    replay): the default 100 sizes state-store version retention for
-    mid-stream failure recovery, but every replay's checkpoint is a
-    throwaway tempdir deleted before returning — there is nothing to
-    recover, at any scale. ``partitions=None`` applies only the
-    retention pin (the drawdown replay keeps the session partition
-    count — see its call site)."""
-
-    def __init__(self, spark: SparkSession, partitions: int | None) -> None:
-        self._spark = spark
-        self._n = None if partitions is None else int(partitions)
-
-    def __enter__(self) -> None:
-        # The pin relies on the sequential-callers invariant: a second
-        # streaming query started during a pinned drain would silently
-        # capture this pin's partition count at ITS start (ADVICE r14).
-        # Assert the invariant instead of documenting it — every
-        # harness is sequential today, so this is free; a future
-        # concurrent caller fails loudly here instead of mis-pinning.
-        active = self._spark.streams.active
-        if active:
-            raise RuntimeError(
-                "_stream_shuffle_pin entered while other streaming "
-                f"queries are active ({[q.name for q in active]}); the "
-                "session-global shuffle-partition pin would leak into "
-                "them — run replays sequentially or move the pin to a "
-                "cloned session"
-            )
-        self._saved: dict[str, str | None] = {}
-        pins = {"spark.sql.streaming.minBatchesToRetain": "2"}
-        if self._n is not None:
-            pins["spark.sql.shuffle.partitions"] = str(self._n)
-        for key, val in pins.items():
-            try:
-                self._saved[key] = self._spark.conf.get(key)
-            except Exception:  # noqa: BLE001 — unset restores to unset
-                self._saved[key] = None
-            self._spark.conf.set(key, val)
-
-    def __exit__(self, *exc) -> None:
-        for key, val in self._saved.items():
-            if val is None:
-                self._spark.conf.unset(key)
-            else:
-                self._spark.conf.set(key, val)
-
-
-def _drain_spool(query, spool: str, what: str, timeout_s: int) -> None:
-    """Await an availableNow drain, then DELETE the spool tempdir: the
-    memory sink has materialized every emitted row on the driver by
-    termination, so the source files are dead weight — without this
-    every bench/test run grew /tmp by one spool (ADVICE r6). The spool
-    is removed on the timeout path too (the query is stopped first)."""
-    import shutil
-
-    ok = query.awaitTermination(timeout_s)
-    if not ok:
-        query.stop()
-    shutil.rmtree(spool, ignore_errors=True)
-    if not ok:
-        raise TimeoutError(f"{what} replay did not finish in {timeout_s}s")
-
-
-def _sentinel_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """One-partition local PRICE_SCHEMA frame for spool sentinels
-    (OPTIMIZATION_r15, guide §4 — the Python boundary in an unexpected
-    place): ``createDataFrame(list-of-tuples)`` parallelizes the rows
-    over ``defaultParallelism`` PYTHON-RDD slices, so the
-    ``coalesce(1)`` the one-file spool write needs makes a single task
-    iterate all 32 slices SEQUENTIALLY, paying one Python-worker
-    round-trip per slice — measured 5.2 s to write a ONE-ROW sentinel
-    at local[32], the single largest fixed cost in every spool replay.
-    The pandas+Arrow path materializes the same rows as ONE JVM
-    partition (measured 0.5 s, values identical — both paths convert
-    naive timestamps via the UTC session zone)."""
+    """``frame`` plus one far-future tick (+72 h past ``hi``) per
+    (coin_id, exchange) key, as one spool frame. The ticks are built as
+    a one-partition local frame through pandas+Arrow (OPTIMIZATION_r15,
+    guide §4): ``createDataFrame(list-of-tuples)`` parallelizes rows
+    over ``defaultParallelism`` Python-RDD slices, and the spool
+    write's single task then walked all 32 slices one Python round trip
+    at a time — 5.2 s for ONE row at local[32], against 0.5 s (values
+    identical: both convert naive timestamps via the UTC session
+    zone)."""
     import pandas as pd
 
-    return spark.createDataFrame(
+    far = hi + timedelta(hours=72)
+    sentinel = frame.sparkSession.createDataFrame(
         pd.DataFrame(
-            rows, columns=["coin_id", "exchange", "timestamp", "price", "volume"]
+            [(coin, exchange, far, 0.0, 0.0) for coin, exchange in keys],
+            columns=PRICE_COLS,
         ),
         schema=PRICE_SCHEMA,
     )
+    return frame.unionByName(sentinel).coalesce(_SPOOL_FILES)
 
 
-def _spool_with_sentinel(spark: SparkSession, real: DataFrame, max_ts, prefix: str) -> str:
-    """Spool a price feed to a flat parquet dir plus one far-future
-    sentinel tick (+72 h): the sentinel advances the final watermark
-    past every REAL window/session so an availableNow replay emits them
-    all in append mode. Shared by every *_stream_replay builder."""
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
+def _feed_wave(real: DataFrame, lo, hi) -> list[list[DataFrame]]:
+    return [[real.coalesce(_SPOOL_FILES)]]
 
-    spool = tempfile.mkdtemp(prefix=prefix)
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", max_ts + timedelta(hours=72), 0.0, 0.0)],
-    )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(spool, "sentinel")
-    )
-    # flatten: the file stream reads plain *.parquet files in one dir
-    # (the dataset-dir _SUCCESS markers must not reach the reader)
-    n = 0
-    for sub in ("feed", "sentinel"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f),
-                    os.path.join(spool, f"{n:04d}.parquet"),
+
+def _sentinel_wave(real: DataFrame, lo, hi) -> list[list[DataFrame]]:
+    return [[_with_sentinel(real, hi)]]
+
+
+def _partitions_for(spark: SparkSession, nbytes: int) -> int:
+    """State/shuffle partition count for ``nbytes`` of stream input
+    (OPTIMIZATION_r14, guide §2.2: partitioning follows measured data
+    size, never the local core count): one partition per ~64 MB of
+    parquet, capped at the session's configured count. Structured
+    Streaming fixes the stateful-operator partition count at query start
+    and AQE never applies to streaming plans, so the batch-sized session
+    default made every micro-batch run 32 state-store tasks over a few
+    MB — pure task/commit overhead, quadrupled per store by a
+    stream-stream join."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, min(nbytes // (64 << 20) + 1, cap))
+
+
+def _set_conf(spark: SparkSession, conf: dict) -> dict:
+    """Set every key (``None`` unsets it) and return the previous
+    values in the same form, so a second call restores them."""
+    old = {key: spark.conf.get(key, None) for key in conf}
+    for key, val in conf.items():
+        if val is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, val)
+    return old
+
+
+def _replay(
+    spark: SparkSession,
+    what: str,
+    feed: DataFrame | None,
+    waves,
+    stream_fn,
+    out_schema: str,
+    sink="memory",
+    *,
+    keep: str | None = None,
+    bounds_col: str = "timestamp",
+    state_bytes: int | str | None = "spool",
+    available_now: bool = True,
+    timeout_s: float = 600,
+) -> DataFrame:
+    """Run one stream replay to completion and return its rows as a
+    batch frame. The contract every ``*_stream_replay`` function shares:
+
+    - The stream runs at BUILD time (a stream cannot be packaged as a
+      lazy batch plan); timing the returned frame measures only the
+      scan of the sink's rows.
+    - ``feed`` is materialized once by an eager ``localCheckpoint``
+      (OPTIMIZATION_r15, guide §2.4: the bounds read and every spool
+      write otherwise re-derive it; vwap at sf0.1 went 4.4 -> 4.1 s),
+      and its min/max ``bounds_col`` come back in one driver read. An
+      empty feed returns an empty ``out_schema`` frame at once. A
+      ``None`` feed (a source that is its own data) skips both.
+    - ``waves(feed, lo, hi)`` lists the spool waves, each a list of
+      frames written as parquet, their files flattened to
+      ``NNNN.parquet`` with strictly increasing mtimes (the file source
+      schedules oldest-first, so a ``maxFilesPerTrigger=1`` reader
+      drains them in order). Wave k moves into the spool just before
+      the k-th start of the same query from the same checkpoint, so
+      later waves meet the state and watermark earlier ones left.
+    - A replay's sentinel rows (+72 h) push the final watermark past
+      every REAL window, so append mode emits them all; the sentinel's
+      own still-open output is withheld or dropped by ``keep``, a SQL
+      predicate on the emitted rows.
+    - ``stream_fn(spool)`` builds the streaming frame. ``sink`` is
+      ``"memory"``, ``"parquet"`` (the fault-tolerant sink, rows land
+      executor-side) or a ``foreachBatch`` handler
+      ``(batch, epoch_id, out_dir) -> frame`` whose frame lands in
+      ``sinks.write_table``'s epoch-partitioned layout (a retried
+      epoch replaces its output: effectively-once on top of the
+      checkpointed offsets).
+    - Conf is pinned for the drains: ``minBatchesToRetain=2`` (state
+      versions serve mid-stream recovery, and the checkpoint is deleted
+      on return; ~4% on the 36-trigger restfeed replay) and the state
+      partition count [[_partitions_for]] ``state_bytes``: "spool"
+      measures the spooled files, an int is the caller's estimate,
+      ``None`` keeps the session's count. A checkpoint restart reuses
+      the count in its offset log. The pin is session-global, so it
+      refuses to run while another stream is active.
+    - All drains share one ``timeout_s`` and raise ``TimeoutError``
+      past it. ``available_now=False`` serves Python data sources,
+      which have no ``availableNow`` (Spark falls back to one batch,
+      which in append mode emits nothing): a fast processingTime
+      trigger drained by ``processAllAvailable``, which also waits for
+      the trailing no-data batch that commits the final watermark.
+    - Teardown runs on success, timeout and failure alike: the query
+      stops, the memory sink's view is dropped and the tempdir (spool,
+      checkpoint, sink) is deleted. A memory-sink result stays
+      readable without its view (its plan holds the sink's rows); the
+      other sinks' results are localCheckpoint-materialized first.
+    """
+    lo = hi = None
+    if feed is not None:
+        feed = feed.localCheckpoint(eager=True)
+        lo, hi = feed.agg(F.min(bounds_col), F.max(bounds_col)).collect()[0]
+        if hi is None:
+            return spark.createDataFrame([], out_schema)
+    active = spark.streams.active
+    if active:
+        raise RuntimeError(
+            f"{what} replay started while other streaming queries are active "
+            f"({[q.name for q in active]}); its session-global conf pin would "
+            "leak into them — run replays sequentially"
+        )
+    name = f"{what}_replay_{uuid.uuid4().hex[:8]}"
+    root = tempfile.mkdtemp(prefix=f"{name}_")
+    spool, out = os.path.join(root, "spool"), os.path.join(root, "out")
+    table = sinks.table_dir(out, "rows")
+    query = saved = None
+    try:
+        os.makedirs(spool)
+        held: list[list[str]] = []
+        n, base = 0, time.time() - 3600
+        for wave in waves(feed, lo, hi):
+            held.append([])
+            for frame in wave:
+                part = os.path.join(root, "part")
+                frame.write.parquet(part)
+                for f in sorted(os.listdir(part)):
+                    if f.endswith(".parquet"):
+                        dst = os.path.join(root, f"{n:04d}.parquet")
+                        os.rename(os.path.join(part, f), dst)
+                        os.utime(dst, (base + n, base + n))
+                        held[-1].append(dst)
+                        n += 1
+                shutil.rmtree(part)
+        if state_bytes == "spool":
+            state_bytes = sum(os.path.getsize(f) for w in held for f in w)
+        pins = {"spark.sql.streaming.minBatchesToRetain": "2"}
+        if state_bytes is not None:
+            parts = _partitions_for(spark, state_bytes)
+            pins["spark.sql.shuffle.partitions"] = str(parts)
+        saved = _set_conf(spark, pins)
+        deadline = time.monotonic() + timeout_s
+        for files in held:
+            for f in files:
+                os.rename(f, os.path.join(spool, os.path.basename(f)))
+            writer = (
+                stream_fn(spool)
+                .writeStream.outputMode("append")
+                .queryName(name)
+                .option("checkpointLocation", os.path.join(root, "ckpt"))
+            )
+            if sink == "memory":
+                writer = writer.format("memory")
+            elif sink == "parquet":
+                writer = writer.format("parquet").option("path", table)
+            else:
+                writer = writer.foreachBatch(
+                    lambda batch, epoch_id: sinks.write_table(
+                        sink(batch, epoch_id, out), out, "rows", epoch_id=epoch_id
+                    )
                 )
-                n += 1
-        shutil.rmtree(subdir)
-    return spool
+            if available_now:
+                query = writer.trigger(availableNow=True).start()
+                done = query.awaitTermination(max(deadline - time.monotonic(), 0.001))
+            else:
+                query = writer.trigger(processingTime="50 milliseconds").start()
+                timer = threading.Timer(max(deadline - time.monotonic(), 0), query.stop)
+                timer.start()
+                try:
+                    query.processAllAvailable()
+                finally:
+                    timer.cancel()
+                done = query.isActive  # the timer stops it when time runs out
+            if not done:
+                raise TimeoutError(f"{what} replay did not finish in {timeout_s}s")
+        if sink == "memory":
+            result = spark.table(name)
+        else:
+            result = spark.read.schema(out_schema).parquet(table).select(
+                *DataType.fromDDL(out_schema).names
+            )
+        if keep is not None:
+            result = result.filter(keep)
+        return result if sink == "memory" else result.localCheckpoint(eager=True)
+    finally:
+        if query is not None:
+            query.stop()
+        spark.catalog.dropTempView(name)
+        if saved is not None:
+            _set_conf(spark, saved)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def vwap_stream_replay(
+    spark: SparkSession, price: DataFrame, timeout_s: int = 600
+) -> DataFrame:
+    """[[vwap_stream]] (delay 0) over the feed plus a sentinel: emits
+    exactly the batch VWAP of the feed. Oracle = ``vwap_hourly``'s SQL."""
+    return _replay(
+        spark, "vwap", price.select(*PRICE_COLS), _sentinel_wave,
+        lambda spool: vwap_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        "coin_id string, exchange string, timestamp timestamp,"
+        " vwap double, total_volume double, n_ticks bigint",
+        keep=_NOT_SENTINEL, timeout_s=timeout_s,
+    )
 
 
 def session_stream_replay(
     spark: SparkSession, price: DataFrame, gap_minutes: int = 360,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[session_stream]] — the
-    second streaming path to earn a driver-side oracle-hash row (after
-    [[vwap_stream_replay]]): spool + sentinel, event-time session
-    windows run to completion under ``availableNow``, and the emitted
+    """[[session_stream]] over the feed plus a sentinel: the emitted
     sessions must hash-match the BATCH gaps-and-islands sessionization
-    (`trading_sessions`' exact SQL) — session_window semantics
-    (end = last tick + gap, exclusive) equal the batch formulation by
-    construction, and this proves it engine-to-engine.
-
-    As with the VWAP replay, the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import uuid
-
-    out_schema = (
+    (`trading_sessions`' SQL) — session_window semantics (end = last
+    tick + gap, exclusive) equal the batch formulation, and this proves
+    it engine-to-engine."""
+    return _replay(
+        spark, "session", price.select(*PRICE_COLS), _sentinel_wave,
+        lambda spool: session_stream(
+            read_price_stream(spark, spool), gap_minutes=gap_minutes, delay="0 seconds"
+        ),
         "coin_id string, exchange string, session_start timestamp,"
-        " session_end timestamp, n_ticks bigint, low double, high double"
+        " session_end timestamp, n_ticks bigint, low double, high double",
+        keep=_NOT_SENTINEL, timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="session_replay_")
-    name = f"session_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            session_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                gap_minutes=gap_minutes,
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "session", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
 
 
 def ohlc_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[ohlc_stream]] — the third
-    streaming path with a driver-side oracle-hash row, and the one
-    whose batch twin (``ohlc_candles``) feeds half the engine's candle
-    analytics: spool + sentinel ([[_spool_with_sentinel]]), watermarked
-    tumbling candles run to completion under ``availableNow``, and the
-    emitted candles must hash-match the batch ``ohlc_data`` SQL exactly
-    — the struct-ordering open/close convention is what makes
-    batch===stream hold on tied timestamps.
-
-    As with the other replays, the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import uuid
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    """[[ohlc_stream]] over the feed plus a sentinel: the emitted candles
+    must hash-match the batch ``ohlc_data`` SQL (whose twin
+    ``ohlc_candles`` feeds half the candle analytics) — the
+    struct-ordering open/close convention is what keeps batch===stream
+    on tied timestamps."""
+    return _replay(
+        spark, "ohlc", price.select(*PRICE_COLS), _sentinel_wave,
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _CANDLES, keep=_NOT_SENTINEL, timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="ohlc_replay_")
-    name = f"ohlc_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            ohlc_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "ohlc", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
 
 
 def spread_stream_replay(
@@ -717,52 +706,21 @@ def spread_stream_replay(
     watermark_minutes: int = 60,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Fourth driver-checkable STREAMING path, and the first for a
-    STREAM-STREAM join ([[cross_exchange_stream_join]]): the spooled
-    feed replayed under ``availableNow``, emitted matched pairs must
-    hash-match the batch theta join exactly. Unlike the windowed-agg
-    replays no sentinel is needed — an append-mode INNER join emits a
-    match as soon as both rows arrive; the watermark only bounds
-    buffered state, never withholds results.
-
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-
-    out_schema = (
-        "symbol string, ts_a timestamp, price_a double,"
-        " ts_b timestamp, price_b double, spread double"
+    """STREAM-STREAM inner join ([[cross_exchange_stream_join]]) over the
+    feed: emitted matched pairs must hash-match the batch theta join.
+    No sentinel: an append-mode INNER join emits a match as soon as both
+    rows arrive; the watermark only bounds buffered state."""
+    return _replay(
+        spark, "spread", price.select(*PRICE_COLS), _feed_wave,
+        lambda spool: cross_exchange_stream_join(
+            read_price_stream(spark, spool),
+            exchange_a,
+            exchange_b,
+            tolerance_minutes=tolerance_minutes,
+            watermark_minutes=watermark_minutes,
+        ),
+        _SPREADS, timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    if real.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="spread_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    name = f"spread_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            cross_exchange_stream_join(
-                read_price_stream(spark, os.path.join(spool, "feed", "*.parquet")),
-                exchange_a,
-                exchange_b,
-                tolerance_minutes=tolerance_minutes,
-                watermark_minutes=watermark_minutes,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "spread", timeout_s)
-    return spark.table(name)
 
 
 def restfeed_stream_replay(
@@ -772,443 +730,152 @@ def restfeed_stream_replay(
     minutes: int = 180,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Fifth driver-checkable STREAMING path, and the first whose
-    SOURCE is the custom Python DataSource (sources.restfeed) rather
-    than a parquet spool: the reference's REST poll loop
-    (dags/crypto_data_streaming.py:223-246 fetches a page feed every 5
-    minutes) replayed end-to-end — ``readStream.format("cryptofeed")``
-    drains ``minutes`` of the deterministic feed in 5-minute
-    micro-batches under ``availableNow``, through the watermarked
-    tumbling-candle aggregate ([[ohlc_stream]]), into a memory sink.
+    """The custom Python DataSource (sources.restfeed) as a stream
+    SOURCE: the reference's REST poll loop (dags/crypto_data_streaming.py
+    :223-246 fetches a page feed every 5 minutes) drained in 5-minute
+    micro-batches through [[ohlc_stream]].
 
     No sentinel, deliberately: the final watermark stops at the feed's
-    last tick (minute ``minutes - 1``), so the LAST hour's window never
-    closes and append mode withholds it — the emitted result is exactly
-    the closed-form candles of the first ``minutes // 60 - 1`` full
-    hours (+ nothing from the open tail), which is the watermark
-    semantics the oracle encodes. The feed is integer arithmetic, so
-    the oracle replays generation + candles + the withheld-window rule
-    entirely in SQL (hash-exact, not rows-only).
-
-    Trigger mechanics: Python micro-batch streams do not support
-    ``availableNow`` (Spark falls back to single-batch execution,
-    which in append mode emits nothing — observed, not speculated), so
-    the drain is a fast ``processingTime`` loop + ``processAllAvailable``
-    — which ALSO waits for the trailing no-data micro-batch that
-    commits the final watermark and flushes the closed windows to the
-    sink (its barrier is "no pending offsets AND no pending commits",
-    and the no-data batch is scheduled immediately once the watermark
-    advances past committed state).
-
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import uuid
-
+    last tick (minute ``minutes - 1``), so append mode withholds the
+    LAST hour's window — the result is exactly the closed-form candles
+    of the first ``minutes // 60 - 1`` full hours, the watermark rule
+    the oracle replays in SQL (hash-exact: the feed is integer
+    arithmetic). The feed's size is closed-form too (~50 B per
+    (page-coin, minute) tick), so the state partition count comes
+    without a scan."""
     from ..sources import restfeed
 
     restfeed.register(spark)
-    feed = (
-        spark.readStream.format("cryptofeed")
-        .option("pages", pages)
-        .option("coins_per_page", coins_per_page)
-        .option("minutes", minutes)
-        .option("batch_minutes", 5)
-        .load()
+    return _replay(
+        spark, "restfeed", None, lambda *_: [[]],
+        lambda _spool: ohlc_stream(
+            spark.readStream.format("cryptofeed")
+            .option("pages", pages)
+            .option("coins_per_page", coins_per_page)
+            .option("minutes", minutes)
+            .option("batch_minutes", 5)
+            .load(),
+            delay="0 seconds",
+        ),
+        _CANDLES,
+        state_bytes=pages * coins_per_page * minutes * 50,
+        available_now=False,
+        timeout_s=timeout_s,
     )
-    name = f"restfeed_replay_{uuid.uuid4().hex[:8]}"
-    # the feed is closed-form, so its size is known WITHOUT a scan:
-    # one tick per (page-coin, minute) — derive the state partition
-    # count the same way the spool replays derive theirs from on-disk
-    # bytes (~50 B/tick; OPTIMIZATION_r14, guide §2.2). The session
-    # default made each of the 36 five-minute micro-batches run 32
-    # state-store tasks over ~100 rows.
-    n_ticks = pages * coins_per_page * minutes
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = int(max(1, min((n_ticks * 50) // (64 << 20) + 1, cap)))
-    with _stream_shuffle_pin(spark, parts):
-        query = (
-            ohlc_stream(feed, delay="0 seconds")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(processingTime="50 milliseconds")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        query.awaitTermination(timeout_s)
-    return spark.table(name)
 
 
 def dedup_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[dedup_stream]] — the sixth
-    streaming path with a driver-side oracle-hash row, and the first
-    for the at-least-once -> effectively-once ingestion guard: the
-    spool holds the real feed PLUS planted re-deliveries (an exact
-    copy of ~1/7 of the rows, landing in later spool files like a
-    source retry would), and the stream dedups on the FULL row with a
-    watermark delay that outlasts the whole replay horizon, so every
-    re-delivery is dropped no matter which micro-batch it lands in.
-    Emitted rows are therefore exactly DISTINCT(feed) — the oracle is
-    one DISTINCT over the batch price base, and a single surviving
-    duplicate flips the driver hash.
+    """[[dedup_stream]], the at-least-once -> effectively-once guard: the
+    spool holds the feed PLUS planted re-deliveries (exact copies of
+    ~1/7 of the rows in later spool files, like a source retry), and
+    the stream dedups on the FULL row with a delay outlasting the whole
+    horizon, so every re-delivery is dropped whichever micro-batch it
+    lands in. Emitted rows are exactly DISTINCT(feed); a single
+    surviving duplicate flips the driver hash. Copies are bit-identical,
+    so which one survives is unobservable. No sentinel: dedup emits at
+    once (filter-shaped state), nothing waits for a final watermark."""
 
-    Full-row keys are what make the replay deterministic: copies are
-    bit-identical, so WHICH copy survives is unobservable — no
-    arrival-order dependence. No sentinel either, deliberately:
-    dedup emission is immediate (filter-shaped state, not
-    window-close-gated), so append mode needs no final watermark push.
-    With a production-sized delay the state-eviction path (re-emission
-    after the watermark passes a key) is exercised by the pytest, not
-    the replay.
+    def waves(real, lo, hi):
+        key = F.concat_ws("|", "coin_id", "exchange", F.col("timestamp").cast("string"))
+        redelivered = real.filter(F.crc32(key) % 7 == 0)
+        return [[real.coalesce(_SPOOL_FILES), redelivered.coalesce(_SPOOL_FILES)]]
 
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    cols = ["coin_id", "exchange", "timestamp", "price", "volume"]
-    real = price.select(*cols)
-    spool = tempfile.mkdtemp(prefix="dedup_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    redelivered = real.filter(
-        F.crc32(
-            F.concat_ws(
-                "|", "coin_id", "exchange", F.col("timestamp").cast("string")
-            )
-        )
-        % 7
-        == 0
+    return _replay(
+        spark, "dedup", price.select(*PRICE_COLS), waves,
+        lambda spool: dedup_stream(
+            read_price_stream(spark, spool),
+            keys=PRICE_COLS,
+            delay="8760 hours",
+        ),
+        PRICE_SCHEMA, timeout_s=timeout_s,
     )
-    redelivered.coalesce(2).write.mode("overwrite").parquet(
-        os.path.join(spool, "redeliver")
-    )
-    n = 0
-    for sub in ("feed", "redeliver"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(spool, f"{n:04d}.parquet")
-                )
-                n += 1
-        shutil.rmtree(subdir)
-    name = f"dedup_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            dedup_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                keys=cols,
-                delay="8760 hours",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "dedup", timeout_s)
-    return spark.table(name)
 
 
 def recovery_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Exactly-once / checkpoint-recovery replay (T7) — the seventh
-    driver-hash streaming row, promoting failure recovery from
-    pytest-only evidence to an oracle-verified row: the drain is
-    KILLED mid-feed and restarted from its checkpoint, and the final
-    sink contents must hash-match the uninterrupted batch candles.
+    """Exactly-once checkpoint recovery (T7): the candle drain is KILLED
+    mid-feed and restarted from its checkpoint, and the final parquet
+    sink must hash-match the uninterrupted batch candles (same SQL as
+    [[ohlc_stream_replay]]).
 
-    Mechanics: the feed is split AT A TIMESTAMP into two spool waves
-    (phase 1: ts <= midpoint; phase 2: the rest + the +72 h sentinel).
-    Run 1 drains wave 1 under ``availableNow`` through watermarked
-    tumbling OHLC into a PARQUET sink (the fault-tolerant sink family,
-    unlike the other replays' memory sinks) with a checkpoint, then
-    terminates — the hour straddling the split is still OPEN in state,
-    so the interruption lands mid-window, not at a tidy boundary.
-    Run 2 renames wave 2 into the spool and restarts the SAME query
-    from the SAME checkpoint: carried state must complete the
-    straddling hour from both waves' ticks, the sentinel closes every
-    real window, and the file-source log must neither re-read wave 1
-    (no duplicate candles) nor drop wave-2 ticks (time-split waves
-    keep every phase-2 window end above the recovered watermark).
-    Any failure mode — lost state, double emission, late-drop —
-    changes the final frame and flips the driver hash against the
-    batch-candle oracle (same SQL as [[ohlc_stream_replay]]).
+    The feed splits AT the min/max-timestamp midpoint into two waves:
+    ticks up to it, then the rest plus the sentinel. Run 1 ends with
+    the hour straddling the split still OPEN in state, so the
+    interruption lands mid-window. Run 2 must complete that hour from
+    carried state, must not re-read wave 1 (no duplicate candles) and
+    must not drop wave-2 ticks (every phase-2 window ends above the
+    recovered watermark). Lost state, double emission or a late drop
+    each change the frame."""
 
-    The split point is the min/max-timestamp midpoint (two 1-row
-    driver reads, same documented boundary as the other replay
-    builders). The streaming jobs run at BUILD time; the returned
-    frame is localCheckpoint-materialized so every tempdir (spool,
-    checkpoint, sink) is deleted before returning — a bench timing
-    measures the materialized scan.
-    """
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
+    def waves(real, lo, hi):
+        mid = lo + (hi - lo) / 2
+        ts = F.col("timestamp")
+        return [
+            [real.filter(ts <= mid).coalesce(_SPOOL_FILES)],
+            [_with_sentinel(real.filter(ts > mid), hi)],
+        ]
 
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    return _replay(
+        spark, "recovery", price.select(*PRICE_COLS), waves,
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _CANDLES, "parquet", keep=_NOT_SENTINEL, timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame([], out_schema)
-    mid = bounds.lo + (bounds.hi - bounds.lo) / 2
-
-    root = tempfile.mkdtemp(prefix="recovery_replay_")
-    spool = os.path.join(root, "spool")
-    held = os.path.join(root, "held")
-    os.makedirs(spool)
-    os.makedirs(held)
-    real.filter(F.col("timestamp") <= mid).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "wave1"))
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", bounds.hi + timedelta(hours=72), 0.0, 0.0)],
-    )
-    real.filter(F.col("timestamp") > mid).unionByName(sentinel).coalesce(
-        2
-    ).write.mode("overwrite").parquet(os.path.join(root, "wave2"))
-    for src, dst in (("wave1", spool), ("wave2", held)):
-        subdir = os.path.join(root, src)
-        for i, f in enumerate(sorted(os.listdir(subdir))):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(dst, f"{src}_{i:02d}.parquet")
-                )
-        shutil.rmtree(subdir)
-
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-
-    def drain() -> None:
-        # the pin only binds on run 1 — a checkpoint restart reuses the
-        # state partition count recorded in the offset log regardless
-        # of the session conf, which is exactly the consistency the
-        # recovery semantics need
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                ohlc_stream(
-                    read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                    delay="0 seconds",
-                )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not query.awaitTermination(timeout_s):
-                query.stop()
-                shutil.rmtree(root, ignore_errors=True)
-                raise TimeoutError(
-                    f"recovery replay did not finish in {timeout_s}s"
-                )
-
-    # try/finally: a failed drain (StreamingQueryException) must not
-    # leak the spool/sink/checkpoint tree (same class as the drawdown
-    # replay's code-review-r10 fix; the timeout path already cleaned)
-    try:
-        drain()  # run 1: wave 1 only — killed with the split hour open in state
-        for f in sorted(os.listdir(held)):
-            os.rename(os.path.join(held, f), os.path.join(spool, f))
-        drain()  # run 2: resumes from the checkpoint, drains wave 2 + sentinel
-        result = (
-            spark.read.schema(out_schema)
-            .parquet(out)
-            .filter(F.col("coin_id") != "__sentinel__")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def enrich_stream_replay(
     spark: SparkSession, price: DataFrame, dim: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[enrich_stream]] — the
-    STREAM-STATIC broadcast lookup join (the reference attaches coin
-    metadata to every tick the same way, client-side): the spooled
-    tick feed left-joins the coins dimension per micro-batch, and the
-    emitted rows must hash-match the one-shot batch left join. The
-    join is stateless (no watermark, no sentinel, every input row
-    emits exactly once, null-extended when the dimension misses), so
-    batch === stream by construction — this row proves it
-    engine-to-engine like the other seven streaming replays.
-
-    ``dim`` arrives keyed (coin_id, exchange, name, symbol); the
-    broadcast hint inside enrich_stream keeps the per-batch join
-    map-side — the executed micro-batch plans never shuffle the feed.
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-
-    out_schema = (
+    """[[enrich_stream]], the STREAM-STATIC broadcast lookup join (the
+    reference attaches coin metadata to every tick the same way,
+    client-side): the feed left-joins the coins dimension per
+    micro-batch, and the emitted rows must hash-match the one-shot
+    batch left join. Stateless — every input row emits once,
+    null-extended when the dimension misses — so batch === stream by
+    construction. ``dim`` arrives keyed (coin_id, exchange, name,
+    symbol); the broadcast hint keeps every micro-batch join map-side."""
+    return _replay(
+        spark, "enrich", price.select(*PRICE_COLS), _feed_wave,
+        lambda spool: enrich_stream(
+            read_price_stream(spark, spool), dim, ["coin_id", "exchange"]
+        ).select(*PRICE_COLS, "name", "symbol"),
         "coin_id string, exchange string, timestamp timestamp,"
-        " price double, volume double, name string, symbol string"
+        " price double, volume double, name string, symbol string",
+        timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    if real.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="enrich_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    name = f"enrich_replay_{uuid.uuid4().hex[:8]}"
-    query = (
-        enrich_stream(
-            read_price_stream(spark, os.path.join(spool, "feed", "*.parquet")),
-            dim,
-            ["coin_id", "exchange"],
-        )
-        .select(
-            "coin_id", "exchange", "timestamp", "price", "volume", "name", "symbol"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_spool(query, spool, "enrich", timeout_s)
-    return spark.table(name)
 
 
 def late_drop_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Late-data DROP replay (T6's other half): the six green replay
-    rows prove windows CLOSE correctly; this one proves rows arriving
-    BEHIND the watermark are actually discarded. Wave 1 drains the
-    whole real feed into a parquet sink (checkpoint kept); wave 2
-    re-delivers SABOTAGE copies of the earliest hour's ticks — price
-    −1e6 — plus the +72 h sentinel, and restarts from the checkpoint.
-    The recovered watermark already sits at the real feed's max event
-    time, so every sabotage row's window has been finalized and the
-    windowed aggregate must DROP them; the sentinel then closes the
-    real tail windows. Final frame = exactly the batch candles of the
-    real feed — if watermark enforcement ever leaked a late row, the
-    earliest hour's `low` would plummet to −1e6 and the driver hash
-    would flip. (Same two-drain mechanics as [[recovery_stream_replay]];
-    the two builders pin complementary halves of restart semantics:
-    state CARRIED for open windows there, state FINALIZED against late
-    arrivals here.)
+    """Late-data DROP (T6's other half): rows arriving BEHIND the
+    watermark are discarded. Wave 1 drains the whole feed into a
+    parquet sink; wave 2 re-delivers SABOTAGE copies of the earliest
+    hour's ticks (price −1e6) plus the sentinel, restarting from the
+    checkpoint. The recovered watermark already sits at the feed's max
+    event time, so every sabotage window is finalized and must drop
+    them; the sentinel then closes the tail windows. The final frame is
+    exactly the batch candles — a leaked late row would sink the first
+    hour's `low` to −1e6. Requires a feed spanning more than an hour.
+    Complements [[recovery_stream_replay]]: state CARRIED for open
+    windows there, FINALIZED against late arrivals here."""
 
-    As with the other replays the streaming jobs run at BUILD time; the
-    returned frame is localCheckpoint-materialized and every tempdir is
-    deleted before returning.
-    """
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
+    def waves(real, lo, hi):
+        sabotage = real.filter(F.col("timestamp") < lo + timedelta(hours=1)).withColumn(
+            "price", F.lit(-1_000_000.0)
+        )
+        return [
+            [real.coalesce(_SPOOL_FILES)],
+            [_with_sentinel(sabotage, hi)],
+        ]
 
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    return _replay(
+        spark, "late_drop", price.select(*PRICE_COLS), waves,
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _CANDLES, "parquet", keep=_NOT_SENTINEL, timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame([], out_schema)
-
-    root = tempfile.mkdtemp(prefix="late_drop_replay_")
-    spool = os.path.join(root, "spool")
-    held = os.path.join(root, "held")
-    os.makedirs(spool)
-    os.makedirs(held)
-    real.coalesce(2).write.mode("overwrite").parquet(os.path.join(root, "wave1"))
-    first_hour_end = bounds.lo + timedelta(hours=1)
-    sabotage = (
-        real.filter(F.col("timestamp") < first_hour_end)
-        .withColumn("price", F.lit(-1_000_000.0))
-    )
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", bounds.hi + timedelta(hours=72), 0.0, 0.0)],
-    )
-    sabotage.unionByName(sentinel).coalesce(2).write.mode("overwrite").parquet(
-        os.path.join(root, "wave2")
-    )
-    for src, dst in (("wave1", spool), ("wave2", held)):
-        subdir = os.path.join(root, src)
-        for i, f in enumerate(sorted(os.listdir(subdir))):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(dst, f"{src}_{i:02d}.parquet")
-                )
-        shutil.rmtree(subdir)
-
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-
-    def drain() -> None:
-        # pin binds on run 1 only; the checkpoint restart reuses the
-        # recorded state partition count (see recovery_stream_replay)
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                ohlc_stream(
-                    read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                    delay="0 seconds",
-                )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not query.awaitTermination(timeout_s):
-                query.stop()
-                shutil.rmtree(root, ignore_errors=True)
-                raise TimeoutError(
-                    f"late-drop replay did not finish in {timeout_s}s"
-                )
-
-    drain()  # run 1: the full real feed; watermark commits at max real ts
-    for f in sorted(os.listdir(held)):
-        os.rename(os.path.join(held, f), os.path.join(spool, f))
-    drain()  # run 2: sabotage late rows (must DROP) + sentinel (closes tail)
-    result = (
-        spark.read.schema(out_schema)
-        .parquet(out)
-        .filter(F.col("coin_id") != "__sentinel__")
-        .localCheckpoint()
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def drawdown_stream_replay(
@@ -1217,136 +884,53 @@ def drawdown_stream_replay(
     n_waves: int = 3,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Custom-stateful (``applyInPandasWithState``) replay — promotes
-    T5 from pytest-only to a driver-hash row: the tick feed is split
-    into ``n_waves`` TIME-ORDERED spool waves drained one file per
-    micro-batch (``maxFilesPerTrigger=1``), so per-key state
-    (running peak, tick counter) genuinely crosses batch boundaries —
-    a peak set in wave 1 must still depress drawdowns in wave 3, and a
-    lost/duplicated state carry shifts ``running_peak``/``tick_n`` for
-    every later row and flips the hash. Unlike the indicator path
-    (whose EMA recursion differs from the closed-form oracle at
-    ~1e-11 — rtol-testable but not hash-safe), [[stateful_drawdown]]'s
-    arithmetic is bit-exact by construction, so the oracle is a plain
-    window-function replay (max OVER + one divide + row_number) over
-    the same tick projection.
+    """Custom-stateful (``applyInPandasWithState``) replay of
+    [[stateful_drawdown]] (T5): the ticks split into ``n_waves``
+    TIME-ORDERED files drained one per micro-batch, so per-key state
+    (running peak, tick counter) genuinely crosses batch boundaries — a
+    wave-1 peak must still depress wave-3 drawdowns, and a lost or
+    duplicated carry shifts ``running_peak``/``tick_n`` for every later
+    row. The arithmetic is bit-exact by construction (comparisons, one
+    divide, integers), so the oracle is a plain window replay (max OVER
+    + one divide + row_number). No sentinel and no watermark:
+    NoTimeout append state emits every row in the batch that carried
+    it. Ties in ``timestamp`` stay within one wave (strict-inequality
+    split) and are ordered by ``event_id`` inside the operator,
+    mirroring the oracle's window ORDER BY.
 
-    No sentinel and no watermark: NoTimeout appendix-mode state emits
-    every row in the batch that carried it. Wave files get strictly
-    increasing mtimes (the file source schedules oldest-first); ties
-    in ``timestamp`` stay within one wave (strict-inequality split)
-    and are ordered by ``event_id`` inside the operator, mirroring the
-    oracle's window ORDER BY. The streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the materialized scan.
-
-    Sink (r9 verdict item #4): PARQUET, not memory — the r9
-    measurement proved the memory sink is incompatible with this
-    operator at scale BY CONSTRUCTION (sf10's 10M emitted rows exceed
-    ``spark.driver.maxResultSize`` in one batch) and priced the driver
-    collection at ~+70 s on top of the per-trigger machinery. The
-    parquet sink is the same fault-tolerant evidence mechanism
-    [[recovery_stream_replay]] uses: rows land executor-side, the
-    returned frame is localCheckpoint-materialized, and every tempdir
-    (spool, sink, checkpoint) is deleted before returning. The replay
-    wall is EVIDENCE MACHINERY pricing either way — the three
-    coalesce(1) waves drained one unsplittable file per trigger exist
-    to prove cross-batch state carry; the OPERATOR's own scale shape
-    is 18x at 100x data (NOTES_r09 §5, production availableNow
-    trigger). Rows are identical to the memory-sink form (append-mode
-    emission order doesn't affect the frame's SET of rows), so the
-    driver hash is unchanged.
-    """
-    import os
-    import shutil
-    import tempfile
-    import time
-
+    PARQUET sink, not memory (r9 verdict #4): sf10's 10M emitted rows
+    exceed ``spark.driver.maxResultSize`` in one batch, and the driver
+    collection cost ~+70 s. The state partition count stays the
+    session's (OPTIMIZATION_r14): the operator pays a Python round trip
+    per KEY GROUP each micro-batch, so it wants task slots, not the
+    feed's byte size — the 1-partition size-derived pin measured
+    13 s -> 129 s."""
     from .stateful import stateful_drawdown
 
-    out_schema = (
+    def waves(real, lo, hi):
+        span = (hi - lo) / n_waves
+        ts = F.col("timestamp")
+        return [[
+            real.filter(
+                (ts >= lo if i == 0 else ts > lo + span * i)
+                & (ts <= (hi if i == n_waves - 1 else lo + span * (i + 1)))
+            ).coalesce(1)
+            for i in range(n_waves)
+        ]]
+
+    return _replay(
+        spark, "drawdown",
+        ticks.select(*PRICE_COLS, "event_id"),
+        waves,
+        lambda spool: stateful_drawdown(
+            spark.readStream.schema(PRICE_SCHEMA + ", event_id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(spool)
+        ),
         "coin_id string, exchange string, timestamp timestamp, event_id long,"
-        " price double, running_peak double, drawdown double, tick_n long"
+        " price double, running_peak double, drawdown double, tick_n long",
+        "parquet", state_bytes=None, timeout_s=timeout_s,
     )
-    real = ticks.select(
-        "coin_id", "exchange", "timestamp", "price", "volume", "event_id"
-    )
-    # Materialize the feed ONCE before the wave writes (OPTIMIZATION
-    # r15, guide §2.4): each wave's REQUIRED coalesce(1) — one
-    # unsplittable file per trigger is the cross-batch state-carry
-    # evidence — otherwise collapses the whole upstream tick
-    # derivation into a single task, three times over; the checkpoint
-    # turns those into three single-task cache reads (and the bounds
-    # aggregate below reads it too). ABAB at sf0.1: medians
-    # 15.9 -> 13.6 s under ambient load; values unchanged.
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame([], out_schema)
-    span = (bounds.hi - bounds.lo) / n_waves
-    root = tempfile.mkdtemp(prefix="drawdown_replay_")
-    spool = os.path.join(root, "spool")
-    os.makedirs(spool)
-    base_mtime = time.time() - 3600
-    n = 0
-    for i in range(n_waves):
-        lo = bounds.lo + span * i
-        hi = bounds.hi if i == n_waves - 1 else bounds.lo + span * (i + 1)
-        wave = real.filter(
-            (F.col("timestamp") >= lo if i == 0 else F.col("timestamp") > lo)
-            & (F.col("timestamp") <= hi)
-        )
-        wdir = os.path.join(spool, f"wave{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(wdir)
-        for f in sorted(os.listdir(wdir)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(spool, f"{n:04d}.parquet")
-                os.rename(os.path.join(wdir, f), dst)
-                os.utime(dst, (base_mtime + n, base_mtime + n))
-                n += 1
-        shutil.rmtree(wdir)
-    tick_schema = PRICE_SCHEMA + ", event_id long"
-    stream = (
-        spark.readStream.schema(tick_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(spool)
-    )
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    # try/finally: a failed streaming query (StreamingQueryException
-    # from awaitTermination) must not leak the spool/sink/checkpoint
-    # tree either — the /tmp-growth mode the ADVICE-r6 _drain_spool
-    # cleanup exists to prevent (code-review r10)
-    # Deliberately NOT pinned to the spool-derived partition count
-    # (OPTIMIZATION_r14): applyInPandasWithState pays a per-KEY-GROUP
-    # Python protocol round-trip each micro-batch, so its parallelism
-    # wants the session's task slots, not the feed's byte size — the
-    # byte-derived 1-partition pin serialized all per-coin groups
-    # through one Python worker and measured 13 s -> 129 s. The other
-    # replays' stateful operators are JVM aggregates/joins, where the
-    # derived count only removes task overhead.
-    try:
-        with _stream_shuffle_pin(spark, None):  # retention-only pin
-            query = (
-                stateful_drawdown(stream)
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            ok = query.awaitTermination(timeout_s)
-        if not ok:
-            query.stop()
-            raise TimeoutError(
-                f"drawdown replay did not finish in {timeout_s}s"
-            )
-        result = spark.read.schema(out_schema).parquet(out).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def spread_outer_stream_replay(
@@ -1358,86 +942,33 @@ def spread_outer_stream_replay(
     watermark_minutes: int = 60,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Stream-stream LEFT OUTER join replay — the watermark semantic
-    the inner-join replay ([[spread_stream_replay]]) cannot show: an
-    unmatched left tick must be emitted null-extended exactly once,
-    and only after the watermark proves no future right tick can
-    match it. [[spread_stream_replay]]'s sentinel-free drain works for
-    INNER because matches emit on arrival; for LEFT OUTER the
-    null-extensions near the feed's end would stay buffered forever
-    without a final watermark push, so this builder spools an IN-BAND
-    sentinel pair — one tick per exchange at +72 h under the reserved
-    symbol ``C999999``, which passes the side filters (real symbols
-    are far smaller), advances BOTH sides' watermarks past every real
-    tick, matches only itself, and is dropped from the returned frame.
+    """Stream-stream LEFT OUTER join: an unmatched left tick must be
+    emitted null-extended exactly once, and only after the watermark
+    proves no future right tick can match it — without a final
+    watermark push the null-extensions near the feed's end would stay
+    buffered. So the spool carries an IN-BAND sentinel pair: one tick
+    per exchange under the reserved symbol ``C999999``, which passes
+    the side filters, advances BOTH watermarks past every real tick,
+    matches only itself and is dropped from the result. Emitted ==
+    the batch LEFT theta join (the oracle); the inner face is
+    [[spread_stream_replay]]."""
 
-    Emitted result == the batch LEFT theta join of the real feed
-    (matched pairs per match; unmatched left ticks once with NULL
-    ts_b/price_b/spread), which is exactly what the oracle states.
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-    from datetime import timedelta
+    def waves(real, lo, hi):
+        pair = (("sentinel_C999999", exchange_a), ("sentinel_C999999", exchange_b))
+        return [[_with_sentinel(real, hi, pair)]]
 
-    out_schema = (
-        "symbol string, ts_a timestamp, price_a double,"
-        " ts_b timestamp, price_b double, spread double"
+    return _replay(
+        spark, "spread_outer", price.select(*PRICE_COLS), waves,
+        lambda spool: cross_exchange_stream_join(
+            read_price_stream(spark, spool),
+            exchange_a,
+            exchange_b,
+            tolerance_minutes=tolerance_minutes,
+            watermark_minutes=watermark_minutes,
+            how="leftOuter",
+        ),
+        _SPREADS, keep="symbol != 'C999999'", timeout_s=timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="spread_outer_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    far = max_ts + timedelta(hours=72)
-    sentinel = _sentinel_frame(
-        spark,
-        [
-            ("sentinel_C999999", exchange_a, far, 0.0, 0.0),
-            ("sentinel_C999999", exchange_b, far, 0.0, 0.0),
-        ],
-    )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(spool, "sentinel")
-    )
-    import shutil
-
-    n = 0
-    for sub in ("feed", "sentinel"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(spool, f"{n:04d}.parquet")
-                )
-                n += 1
-        shutil.rmtree(subdir)
-    name = f"spread_outer_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            cross_exchange_stream_join(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                exchange_a,
-                exchange_b,
-                tolerance_minutes=tolerance_minutes,
-                watermark_minutes=watermark_minutes,
-                how="leftOuter",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "spread_outer", timeout_s)
-    return spark.table(name).filter(F.col("symbol") != "C999999")
 
 
 def quality_stream_replay(
@@ -1447,92 +978,32 @@ def quality_stream_replay(
     timeout_s: int = 600,
     n_files: int = 4,
 ) -> DataFrame:
-    """The TRAINED quality filter running where production runs it
-    (r12 verdict item #5): frozen classifier weights applied per
-    micro-batch inside ``foreachBatch`` — the same harness shape as
-    [[run_ingest]] (T3/T4), scoring each arriving document shard with
-    ``classifier.score_quality`` (one broadcast join of the 66-row
-    model + a doc-keyed aggregate, NO retraining: the weights frame is
-    localCheckpoint-frozen before the stream starts, so every batch
-    broadcasts the same materialized leaf) and appending the scored
-    rows through the epoch-partitioned parquet sink
-    (sinks.write_table's overwrite-per-epoch layout = effectively-once
-    on top of the checkpointed source offsets, T7's discipline).
-
-    Determinism: scoring is a pure per-document function of a fixed
-    model, so the union of per-batch outputs equals one batch scoring
-    pass REGARDLESS of micro-batch boundaries — batch === stream by
-    construction, proven engine-to-engine by this replay's driver-hash
-    row (oracle = the qclf scores CTE chain) and pinned
-    boundary-independently by the pytest (1-file vs many-file spool).
-
-    The spool is written as multiple files and drained with
-    ``maxFilesPerTrigger=1`` so per-batch model application genuinely
-    crosses micro-batch boundaries. As with the other replays the
-    streaming job runs at BUILD time; the returned frame is
-    localCheckpoint-materialized and every tempdir is deleted before
-    returning.
-    """
-    import os
-    import shutil
-    import tempfile
-
+    """The TRAINED quality filter where production runs it (r12 verdict
+    #5): frozen classifier weights applied per micro-batch inside
+    ``foreachBatch`` (the [[run_ingest]] shape, T3/T4) — each document
+    shard scored by ``classifier.score_quality``, one broadcast join of
+    the 66-row model with NO retraining (the weights are
+    localCheckpoint-frozen first, so every batch broadcasts the same
+    leaf). Scoring is a pure per-document function of a fixed model, so
+    the union of per-batch outputs equals one batch scoring pass
+    whatever the micro-batch boundaries — proven by the driver-hash row
+    (oracle = the qclf scores CTE chain) and by the pytest (1 vs 5
+    files). The spool is ``n_files`` files drained one per trigger;
+    repartition, not coalesce: the fixture reads as ONE partition, and
+    a coalesce could only ever write one file = one batch."""
     from ..operators import classifier
-    from .. import sinks
 
-    out_schema = "doc_id long, score double, predicted boolean"
-    docs = documents.select("doc_id", "text", "lang", "source")
-    if docs.isEmpty():
-        return spark.createDataFrame([], out_schema)
     wts = weights.localCheckpoint(eager=True)
-    spool = tempfile.mkdtemp(prefix="quality_replay_")
-    # repartition, not coalesce: the fixture tables read as ONE
-    # partition, and coalesce can only shrink — a coalesce(4) spool
-    # would be a single file = a single micro-batch, silently turning
-    # every "crosses batch boundaries" claim vacuous (code-review r13)
-    docs.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(spool, "feed")
+    return _replay(
+        spark, "quality", documents.select("doc_id", "text", "lang", "source"),
+        lambda docs, lo, hi: [[docs.repartition(n_files)]],
+        lambda spool: spark.readStream.schema(
+            "doc_id long, text string, lang string, source string"
+        ).option("maxFilesPerTrigger", 1).parquet(spool),
+        "doc_id long, score double, predicted boolean",
+        lambda batch, epoch_id, out: classifier.score_quality(batch, wts),
+        bounds_col="doc_id", timeout_s=timeout_s,
     )
-    out_dir = tempfile.mkdtemp(prefix="quality_replay_out_")
-    ckpt = os.path.join(out_dir, "_ckpt")
-
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        sinks.write_table(
-            classifier.score_quality(batch, wts),
-            out_dir,
-            "quality_scores",
-            epoch_id=epoch_id,
-        )
-
-    # one try/finally owns BOTH tempdirs: a query that dies inside
-    # handle_batch raises out of _drain_spool's awaitTermination before
-    # its own spool rmtree, and bench/driver runs swallow per-query
-    # errors and keep going — without this every failed run strands a
-    # full corpus copy in /tmp (code-review r13)
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(spool, "feed", "*.parquet"))
-        )
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                stream.writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_spool(query, spool, "quality", timeout_s)
-        return (
-            sinks.read_table(spark, out_dir, "quality_scores")
-            .select("doc_id", "score", "predicted")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def media_dedup_stream_replay(
@@ -1541,98 +1012,54 @@ def media_dedup_stream_replay(
     timeout_s: int = 600,
     n_files: int = 4,
 ) -> DataFrame:
-    """STREAMING perceptual media dedup — the fingerprint-registry
+    """STREAMING perceptual media dedup, the fingerprint-registry
     ingestion a production media pipeline runs: each arriving image
-    shard is dHash-fingerprinted per micro-batch inside
-    ``foreachBatch`` (the same Arrow-batched map pass as the batch
-    family, [[multimodal.dhash_ppm]]), anti-joined against the
-    ACCUMULATED fingerprint registry (a parquet state dir the handler
-    appends to), and only first-seen fingerprints emit a survivor
-    row through the epoch-partitioned exactly-once sink; re-arrivals
-    of a known fingerprint are dropped in-stream. Output:
-    (band0..band3, rep_id), one row per distinct fingerprint.
+    shard is dHash-fingerprinted per micro-batch inside ``foreachBatch``
+    ([[multimodal.dhash_ppm]], the batch family's Arrow-batched map),
+    anti-joined against the ACCUMULATED registry (a parquet state dir
+    the handler extends), and only first-seen fingerprints emit a
+    survivor (band0..band3, rep_id).
 
-    Determinism contract — the streamed registry equals the BATCH
-    rep collapse: the spool is RANGE-ORDERED (file k holds the k-th
-    doc_id quantile chunk, exact ``approxQuantile(..., 0.0)`` cuts;
-    ``maxFilesPerTrigger=1`` with ascending file names AND mtimes
-    drains them in order), so a fingerprint's first-seen batch is the
-    one holding its smallest doc_id and the within-batch survivor is
-    min(doc_id) — hence the emitted survivor per fingerprint is the
-    GLOBAL min doc_id, exactly the ``reps`` table of the batch
-    perceptual family (min doc_id per distinct hash). The oracle is
-    that one GROUP BY; a registry that ever re-emits a known
-    fingerprint (or drops a first arrival) flips the driver hash.
+    Determinism: the spool is RANGE-ORDERED (file k holds the k-th
+    doc_id quantile chunk, exact ``approxQuantile(..., 0.0)`` cuts,
+    drained one file per trigger in order), so a fingerprint's
+    first-seen batch holds its smallest doc_id, and the within-batch
+    survivor min(doc_id) is the GLOBAL min — exactly the batch
+    family's ``reps`` (min doc_id per distinct hash), the oracle's one
+    GROUP BY. A registry that re-emits a known fingerprint or drops a
+    first arrival flips the driver hash.
 
-    Exactly-once: survivors land via sinks.write_table's
-    overwrite-per-epoch layout; a retried epoch REPLACES its output.
-    The registry state is ALSO epoch-partitioned and consulted with
-    ``epoch < epoch_id`` — so a retried epoch re-reads exactly the
-    registry its first attempt saw (its own half-written append is
-    excluded and then overwritten), re-derives the identical survivor
-    set, and the overwrite is a true no-op replay. (A flat append-only
-    state would make retries lose survivors: the left_anti join would
-    consult fingerprints the failed attempt already appended and emit
-    an empty epoch over the previously-written rows.)
-
-    As with the other replays the streaming job runs at BUILD time;
-    the returned frame is localCheckpoint-materialized and every
-    tempdir is deleted before returning.
-    """
-    import os
-    import shutil
-    import tempfile
-
+    Exactly-once: the registry is epoch-partitioned too and consulted
+    with ``epoch < epoch_id``, so a retried epoch re-reads exactly the
+    registry its first attempt saw, re-derives the same survivors and
+    replaces both its state and its sink output. (A flat append-only
+    registry would make a retry anti-join against its own half-written
+    append and emit an empty epoch.)"""
     from ..operators.multimodal import dhash_ppm
-    from .. import sinks
 
     bands = ["band0", "band1", "band2", "band3"]
-    out_schema = "band0 long, band1 long, band2 long, band3 long, rep_id long"
-    media = media.select("doc_id", "width", "height", "payload")
-    if media.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    media = media.persist()
-    # n_files=1 => no interior cuts (approxQuantile NPEs on an empty
-    # probability list)
-    cuts = (
-        media.approxQuantile(
-            "doc_id", [k / n_files for k in range(1, n_files)], 0.0
-        )
-        if n_files > 1
-        else []
-    )
-    edges = [float("-inf"), *cuts, float("inf")]
-    spool = tempfile.mkdtemp(prefix="media_dedup_replay_")
-    n = 0
-    for k in range(n_files):
-        chunk_dir = os.path.join(spool, f"chunk{k}")
-        media.filter(
-            (F.col("doc_id") > edges[k]) & (F.col("doc_id") <= edges[k + 1])
-        ).coalesce(1).write.mode("overwrite").parquet(chunk_dir)
-        for f in sorted(os.listdir(chunk_dir)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(spool, f"{n:04d}.parquet")
-                os.rename(os.path.join(chunk_dir, f), dst)
-                os.utime(dst, (1_000_000 + n, 1_000_000 + n))
-                n += 1
-        shutil.rmtree(chunk_dir)
-    media.unpersist()
-    out_dir = tempfile.mkdtemp(prefix="media_dedup_replay_out_")
-    ckpt = os.path.join(out_dir, "_ckpt")
-    state_dir = os.path.join(out_dir, "_fpstate")
 
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        ss = batch.sparkSession
-        cand = (
-            dhash_ppm(batch)
-            .groupBy(*bands)
-            .agg(F.min("doc_id").alias("rep_id"))
+    def waves(real, lo, hi):
+        # n_files=1 => no interior cuts (approxQuantile NPEs on an
+        # empty probability list)
+        cuts = (
+            real.approxQuantile("doc_id", [k / n_files for k in range(1, n_files)], 0.0)
+            if n_files > 1
+            else []
         )
-        if os.path.isdir(state_dir) and any(
-            d.startswith("epoch=") for d in os.listdir(state_dir)
-        ):
+        edges = [float("-inf"), *cuts, float("inf")]
+        doc = F.col("doc_id")
+        return [[
+            real.filter((doc > edges[k]) & (doc <= edges[k + 1])).coalesce(1)
+            for k in range(n_files)
+        ]]
+
+    def handle_batch(batch: DataFrame, epoch_id: int, out: str) -> DataFrame:
+        state_dir = os.path.join(out, "_fpstate")
+        cand = dhash_ppm(batch).groupBy(*bands).agg(F.min("doc_id").alias("rep_id"))
+        if os.path.isdir(state_dir):
             seen = (
-                ss.read.option("basePath", state_dir)
+                batch.sparkSession.read.option("basePath", state_dir)
                 .parquet(state_dir)
                 .filter(F.col("epoch") < epoch_id)
                 .select(*bands)
@@ -1641,35 +1068,17 @@ def media_dedup_stream_replay(
         # materialize BEFORE the state write: the anti-join must not
         # re-read a registry this very batch is extending
         new = cand.localCheckpoint(eager=True)
-        sinks.write_table(new, out_dir, "media_reps", epoch_id=epoch_id)
-        # overwrite THIS epoch's state partition: a retry re-reads
-        # only earlier epochs (filter above), re-derives the same
-        # survivors, and replaces both its sink and state output
         new.select(*bands).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"epoch={epoch_id}")
         )
+        return new
 
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, width int, height int, payload binary"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(spool, "*.parquet"))
-        )
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                stream.writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_spool(query, spool, "media_dedup", timeout_s)
-        return (
-            sinks.read_table(spark, out_dir, "media_reps")
-            .select(*bands, "rep_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return _replay(
+        spark, "media_dedup", media.select("doc_id", "width", "height", "payload"),
+        waves,
+        lambda spool: spark.readStream.schema(
+            "doc_id long, width int, height int, payload binary"
+        ).option("maxFilesPerTrigger", 1).parquet(spool),
+        "band0 long, band1 long, band2 long, band3 long, rep_id long",
+        handle_batch, bounds_col="doc_id", timeout_s=timeout_s,
+    )

@@ -491,11 +491,10 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
 def test_no_driver_side_materialization_in_operator_paths():
     """Self-policing sweep (the anti-pattern audit every verdict runs,
     pinned as a test): no .collect()/.toPandas()/.first() anywhere in
-    the package except the five documented driver-boundary sites —
-    the stream replays' single-value timestamp reads (1-row
-    aggregates that parameterize the spool sentinel / the
-    recovery-replay wave split) and knn_brute_vectorized's bounded
-    lazy-probe escape hatch. A new hit means a distributed operator
+    the package except the documented driver-boundary sites — the
+    replay harness's 1-row bounds read (it places the spool sentinels
+    and wave splits), the AQE skew probe and knn_brute_vectorized's
+    bounded lazy-probe escape hatch. A new hit means a distributed operator
     grew a driver funnel."""
     import os
     import re
@@ -505,10 +504,9 @@ def test_no_driver_side_materialization_in_operator_paths():
         "etl_visualization_of_cryptocurrency_trading_data_spark",
     )
     allowed = {
-        # replay max-ts reads (4: vwap/spread-family sentinels) + the
-        # recovery, late-drop and drawdown replays' min/max wave-split
-        # reads (3) — all 1-row aggregates
-        ("streaming/pipeline.py", "collect"): 7,
+        # the replay harness's one min/max bounds read per feed (a
+        # 1-row aggregate that places sentinels and wave splits)
+        ("streaming/pipeline.py", "collect"): 1,
         ("operators/similarity.py", "toPandas"): 1,  # lazy-probe hatch
         # AQE skew probe: one 1-row global-aggregate read per mode —
         # the probe must EXECUTE eagerly to read the final adaptive

@@ -1225,3 +1225,190 @@ def test_media_dedup_stream_matches_batch_reps_and_boundaries(spark):
     )
     assert (spans > 1).any(), "no fingerprint spans a batch boundary"
     spark.catalog.clearCache()
+
+
+# --- replay harness: teardown, timeouts, degenerate inputs -----------------
+
+_PRICE_DDL = (
+    "coin_id string, exchange string, timestamp timestamp, price double, volume double"
+)
+_CANDLE_DDL = (
+    "coin_id string, exchange string, timestamp timestamp,"
+    " open double, high double, low double, close double"
+)
+_SPREAD_DDL = (
+    "symbol string, ts_a timestamp, price_a double,"
+    " ts_b timestamp, price_b double, spread double"
+)
+#: every spool replay -> (input kind, declared output schema)
+_SPOOL_REPLAYS = {
+    "vwap_stream_replay": (
+        "price",
+        "coin_id string, exchange string, timestamp timestamp,"
+        " vwap double, total_volume double, n_ticks bigint",
+    ),
+    "session_stream_replay": (
+        "price",
+        "coin_id string, exchange string, session_start timestamp,"
+        " session_end timestamp, n_ticks bigint, low double, high double",
+    ),
+    "ohlc_stream_replay": ("price", _CANDLE_DDL),
+    "spread_stream_replay": ("price", _SPREAD_DDL),
+    "dedup_stream_replay": ("price", _PRICE_DDL),
+    "recovery_stream_replay": ("price", _CANDLE_DDL),
+    "enrich_stream_replay": (
+        "enrich",
+        "coin_id string, exchange string, timestamp timestamp,"
+        " price double, volume double, name string, symbol string",
+    ),
+    "late_drop_stream_replay": ("price", _CANDLE_DDL),
+    "drawdown_stream_replay": (
+        "ticks",
+        "coin_id string, exchange string, timestamp timestamp, event_id long,"
+        " price double, running_peak double, drawdown double, tick_n long",
+    ),
+    "spread_outer_stream_replay": ("price", _SPREAD_DDL),
+    "quality_stream_replay": ("docs", "doc_id long, score double, predicted boolean"),
+    "media_dedup_stream_replay": (
+        "media",
+        "band0 long, band1 long, band2 long, band3 long, rep_id long",
+    ),
+}
+
+
+def _replay_inputs(spark, kind: str, empty: bool) -> tuple:
+    """Positional inputs for a replay function: a small feed spanning
+    more than an hour on the view/click exchanges, or an empty frame of
+    the same schema."""
+    import datetime as dt
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators import multimodal
+
+    T = dt.datetime(2024, 1, 1)
+    ticks = [
+        (f"{x}_C{c}", x, T + dt.timedelta(minutes=m), 10.0 + m + c, 1.0)
+        for x in ("view", "click")
+        for c in (1, 2)
+        for m in (0, 7, 50, 95, 170)
+    ]
+    n = 0 if empty else None
+    if kind in ("price", "enrich"):
+        price = spark.createDataFrame(ticks[:n], _PRICE_DDL)
+        if kind == "price":
+            return (price,)
+        dim = spark.createDataFrame(
+            [("view_C1", "view", "Coin 1", "C1")],
+            "coin_id string, exchange string, name string, symbol string",
+        )
+        return (price, dim)
+    if kind == "ticks":
+        rows = [(*t, i) for i, t in enumerate(ticks)][:n]
+        return (spark.createDataFrame(rows, _PRICE_DDL + ", event_id long"),)
+    if kind == "docs":
+        docs = spark.createDataFrame(
+            [(i, f"token{i % 3} word{i % 5} text", "en", "web") for i in range(12)][:n],
+            "doc_id long, text string, lang string, source string",
+        )
+        weights = spark.range(66).select(
+            F.col("id").alias("bucket"), (F.col("id") / 100.0 - 0.3).alias("weight")
+        )
+        return (docs, weights)
+    ids = spark.range(0 if empty else 12).withColumnRenamed("id", "doc_id")
+    return (multimodal.ppm_table(ids),)
+
+
+def _session_state(spark) -> dict:
+    """What a replay must leave as it found it."""
+    import tempfile
+
+    return {
+        "views": sorted(t.name for t in spark.catalog.listTables() if t.isTemporary),
+        "streams": [q.id for q in spark.streams.active],
+        "tmp": sorted(os.listdir(tempfile.gettempdir())),
+        "conf": [
+            spark.conf.get(k, None)
+            for k in ("spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain")
+        ],
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_SPOOL_REPLAYS))
+def test_replay_leaves_no_session_state(spark, tmp_path, monkeypatch, name):
+    """A replay call leaves no temp view, active stream, tempdir or conf
+    pin behind, and its result stays readable after teardown."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    kind, _ = _SPOOL_REPLAYS[name]
+    args = _replay_inputs(spark, kind, empty=False)
+    before = _session_state(spark)
+    got = getattr(streaming.pipeline, name)(spark, *args)
+    assert _session_state(spark) == before
+    assert got.count() > 0
+    got.write.mode("overwrite").format("noop").save()
+
+
+@pytest.mark.parametrize("name", sorted(_SPOOL_REPLAYS))
+def test_replay_empty_input_returns_declared_schema(spark, monkeypatch, name):
+    """Every spool replay returns 0 rows with exactly its declared
+    output schema on an empty feed, without spooling or starting a
+    stream."""
+    import tempfile
+
+    from pyspark.sql.types import DataType
+
+    def no_spool(*a, **k):
+        raise AssertionError("an empty feed must not reach the spool")
+
+    kind, ddl = _SPOOL_REPLAYS[name]
+    args = _replay_inputs(spark, kind, empty=True)
+    monkeypatch.setattr(tempfile, "mkdtemp", no_spool)
+    got = getattr(streaming.pipeline, name)(spark, *args)
+    assert got.schema == DataType.fromDDL(ddl)
+    assert got.count() == 0
+
+
+@pytest.mark.parametrize("sink", ["memory", "parquet", "foreachBatch"])
+def test_replay_teardown_after_stream_failure(spark, tmp_path, monkeypatch, sink):
+    """A stream that fails at run time raises out of the harness, and
+    the spool, checkpoint, sink, view, query and conf pin are all gone."""
+    import tempfile
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.streaming import pipeline
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    (price,) = _replay_inputs(spark, "price", empty=False)
+    if sink == "foreachBatch":
+        def stream_fn(spool):
+            return pipeline.read_price_stream(spark, spool)
+
+        def sink(batch, epoch_id, out):
+            return batch.select(F.raise_error(F.lit("planted failure")).cast("string").alias("x"))
+    else:
+        def stream_fn(spool):
+            return pipeline.read_price_stream(spark, spool).select(
+                F.raise_error(F.lit("planted failure")).cast("string").alias("x")
+            )
+    before = _session_state(spark)
+    with pytest.raises(Exception, match="planted failure"):
+        pipeline._replay(
+            spark, "failing", price, pipeline._feed_wave, stream_fn, "x string", sink
+        )
+    assert _session_state(spark) == before
+
+
+def test_restfeed_replay_honours_timeout(spark, tmp_path, monkeypatch):
+    """The processAllAvailable drain is bounded too: past ``timeout_s``
+    the query is stopped and the replay raises the spool drains'
+    TimeoutError, leaving no stream, view or tempdir."""
+    import tempfile
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.streaming.pipeline import (
+        restfeed_stream_replay,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = _session_state(spark)
+    with pytest.raises(TimeoutError, match="restfeed replay did not finish in 0s"):
+        restfeed_stream_replay(spark, timeout_s=0)
+    assert _session_state(spark) == before
