@@ -1096,7 +1096,7 @@ SELECT * FROM (VALUES
        aqe_shuffle_reads)""",
     "plan_audit": """
 SELECT * FROM (VALUES
-  ('coin_table', 6, 3, 3, 0, 6),
+  ('coin_table', 4, 1, 1, 0, 0),
   ('exact_dedup', 1, 0, 0, 0, 0),
   ('technical_indicators', 1, 0, 0, 0, 0),
   ('coin_market_cap', 3, 1, 1, 0, 0),

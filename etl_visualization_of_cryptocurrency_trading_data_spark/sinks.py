@@ -29,7 +29,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 # Routing by column presence, first match wins — reference
 # spark-streaming.py:121-132 (minus its dead ema_20 branch).
@@ -250,48 +249,59 @@ def compact_table(
     )
 
 
-# Inferred schema per table directory (absolute path), with the
-# directory's (st_ino, st_mtime_ns) at inference time. See read_table.
-_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+# One read relation per table directory (absolute path): the tree's
+# directory stamps at read time, the session that read it, and the frame.
+# See read_table.
+_RELATIONS: dict[str, tuple[tuple, SparkSession, DataFrame]] = {}
+
+
+def _tree_stamp(path: str) -> tuple:
+    """``(path, st_ino, st_mtime_ns)`` of every directory in the table
+    tree, in walk order; empty for a missing table."""
+    stamp = []
+    for root, _, _ in os.walk(path):
+        try:
+            st = os.stat(root)
+        except FileNotFoundError:  # removed mid-walk: the stamp moves anyway
+            continue
+        stamp.append((root, st.st_ino, st.st_mtime_ns))
+    return tuple(stamp)
 
 
 def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
     """Read a table written by the writers above.
 
-    Parquet schema inference always runs as a Spark job, and on a small
-    serving read that job costs more than the scan. So the first read of
-    a table directory in this process infers the schema, and later reads
-    pass the remembered ``StructType`` to ``spark.read.schema`` (Spark
-    then only lists files). The entry is keyed on the directory's
-    absolute path and is valid while the directory's
-    ``(st_ino, st_mtime_ns)`` is unchanged. Every writer here changes
-    that: a new ``exchange=``/``batch_epoch=`` partition directory, the
-    ``_temporary``/``_SUCCESS`` churn of any Spark append, and the
-    directory swap of ``upsert_by_key``/``compact_table`` all modify the
-    top-level directory, and the next read infers afresh.
+    A parquet read costs a schema-inference job and a file listing, and
+    on a small serving read both cost more than the scan. So a read keeps
+    the whole relation (the frame with its inferred schema and its file
+    listing), keyed on the table directory's absolute path, and a later
+    read in the same session returns that frame while the table tree is
+    unchanged: every directory in it has the ``(st_ino, st_mtime_ns)`` it
+    had when the frame was read. Adding, removing or renaming a file or
+    directory anywhere in the tree changes its parent directory's stamp,
+    so every writer here invalidates the entry: a new ``exchange=``/
+    ``batch_epoch=`` partition, the files and ``_temporary`` churn of
+    an append into an existing partition, and the directory swap of
+    ``upsert_by_key``/``compact_table``. So does a file dropped into a
+    partition by hand. A read from another session reads afresh, so the
+    frame always belongs to the session that asked for it.
 
-    Blind spot: a foreign writer that rewrites files inside an existing
-    partition with a new schema, without touching the table directory,
-    goes unnoticed. Inference reads a single footer, so it never saw
-    such a change reliably either.
+    Blind spots: a file rewritten in place under an existing name (no
+    directory entry changes) is not seen until some other change, and
+    neither is a change made in the same file-system timestamp tick
+    (a few ms on ext4) as an earlier change the read already saw.
     """
     path = os.path.abspath(table_dir(base_dir, table))
-    # Stamp before inferring: a rewrite that races the inference leaves
-    # an entry whose stamp no longer matches, so it is never served.
-    try:
-        st = os.stat(path)
-        stamp = (st.st_ino, st.st_mtime_ns)
-    except FileNotFoundError:  # Spark raises its own error for a missing table
-        stamp = None
-    reader = spark.read.option("basePath", path)
-    hit = _SCHEMAS.get(path)
-    if hit is not None and hit[0] == stamp:
-        df = reader.schema(hit[1]).parquet(path)
-    else:
-        df = reader.parquet(path)
-        _SCHEMAS[path] = (stamp, df.schema)
+    # Stamp before reading: a rewrite that races the read leaves an
+    # entry whose stamp no longer matches, so it is never served.
+    stamp = _tree_stamp(path)
+    hit = _RELATIONS.get(path)
+    if hit is not None and hit[0] == stamp and hit[1] is spark:
+        return hit[2]
+    df = spark.read.option("basePath", path).parquet(path)
     if "batch_epoch" in df.columns:  # epoch bookkeeping, not user data
         df = df.drop("batch_epoch")
+    _RELATIONS[path] = (stamp, spark, df)
     return df
 
 

@@ -3,7 +3,10 @@
 queries, as evidence of the plan shapes the scale design claims
 (broadcast joins, WindowGroupLimit, partial aggregation, pushdown).
 
-Usage: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
+Usage: python scripts/dump_plans.py [sf_dir] [query ...]   (default sf0.01)
+
+With query names, only those sections of the existing EXPLAIN.md are
+re-rendered in place; the others are left as they are.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.plans.registry impor
 from etl_visualization_of_cryptocurrency_trading_data_spark.session import get_spark
 
 SHOWCASE = [
-    "coin_table",            # 3x broadcast join + WindowGroupLimit top-1
+    "coin_table",            # 1 shuffle of max(struct) latest rows + 1 BHJ
     "ohlc_candles",          # partial struct-min/max aggregation, one shuffle
     "technical_indicators",  # single repartition+sort + fused mapInPandas
     "minhash_lsh_pairs",     # codegen'd 64-min aggregate + bucket self-join
@@ -134,40 +137,62 @@ SCAN_DETAIL = {
 }
 
 
+def render(spark, name: str, sf_dir: str) -> list[str]:
+    """One query's EXPLAIN.md section, as lines."""
+    df = QUERIES[name](spark, sf_dir)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    # keep the operator tree, drop the verbose per-node detail dump
+    # — except the Scan blocks for SCAN_DETAIL queries, where
+    # PushedFilters/ReadSchema are the evidence
+    paras = plan.split("\n\n")
+    out = [f"## {name}", "", "```", paras[0], "```", ""]
+    if name in SCAN_DETAIL:
+        scans = [p for p in paras[1:] if "PushedFilters" in p or "ReadSchema" in p]
+        if scans:
+            out += ["Scan details:", "", "```", "\n\n".join(scans), "```", ""]
+    return out
+
+
+def _splice(text: str, sections: dict[str, list[str]]) -> str:
+    """Replace each named ``## name`` section of ``text`` (up to the
+    next ``## `` heading) with its freshly rendered lines."""
+    parts = text.split("\n## ")
+    for i, part in enumerate(parts[1:], 1):
+        name = part.split("\n", 1)[0]
+        if name in sections:
+            parts[i] = "\n".join(sections[name])[len("## "):].rstrip("\n") + "\n"
+    return "\n## ".join(parts)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
+    unknown = [name for name in only if name not in SHOWCASE]
+    if unknown:
+        raise SystemExit(f"no EXPLAIN.md section for {unknown}")
     spark = get_spark(app_name="dump-plans")
-    out = [
-        "# EXPLAIN — headline physical plans",
-        "",
-        f"Generated by `scripts/dump_plans.py` at `{sf_dir}` "
-        "(regenerate after plan-affecting changes).",
-        "",
-    ]
-    for name in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # keep the operator tree, drop the verbose per-node detail dump
-        # — except the Scan blocks for SCAN_DETAIL queries, where
-        # PushedFilters/ReadSchema are the evidence
-        paras = plan.split("\n\n")
-        tree = paras[0]
-        out += [f"## {name}", "", "```", tree, "```", ""]
-        if name in SCAN_DETAIL:
-            scans = [
-                p
-                for p in paras[1:]
-                if "PushedFilters" in p or "ReadSchema" in p
-            ]
-            if scans:
-                out += ["Scan details:", "", "```", "\n\n".join(scans), "```", ""]
-    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote EXPLAIN.md ({len(SHOWCASE)} plans)")
+    path = os.path.join(REPO, "EXPLAIN.md")
+    if only:
+        with open(path) as f:
+            text = f.read()
+        text = _splice(text, {name: render(spark, name, sf_dir) for name in only})
+        print(f"re-rendered {len(only)} sections of EXPLAIN.md")
+    else:
+        out = [
+            "# EXPLAIN — headline physical plans",
+            "",
+            f"Generated by `scripts/dump_plans.py` at `{sf_dir}` "
+            "(regenerate after plan-affecting changes).",
+            "",
+        ]
+        for name in SHOWCASE:
+            out += render(spark, name, sf_dir)
+        text = "\n".join(out)
+        print(f"wrote EXPLAIN.md ({len(SHOWCASE)} plans)")
+    with open(path, "w") as f:
+        f.write(text)
     spark.stop()
 
 

@@ -4,6 +4,7 @@ on tiny literal frames (SURVEY §5.2 operator-family tests)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from etl_visualization_of_cryptocurrency_trading_data_spark.operators import relational
@@ -1009,3 +1010,140 @@ def test_chart_ranges_match_oracle_over_stored_tables(spark, tmp_path):
     ).withColumn("timestamp", F.to_timestamp("timestamp")).withColumn("volume", F.lit(0.0))
     got = serving.price_chart(nulls, "X", "1h").select("price").collect()
     assert sorted(r.price for r in got) == [1.0, 3.0]
+
+
+def _serving_frames(spark):
+    """Tiny serving tables with the degenerate cases coin_table must
+    resolve exactly as the oracle's row_number collapse does: a_C1 ties
+    on its max timestamp in every fact table with different measures
+    (the indicator tie also differs only by a null rsi_14), and carries a
+    null-timestamp price row that must never win; b_C2's latest price
+    ties a NaN against a number and a null; c_C3's price rows all have
+    null timestamps; d_C4 has no OHLC row; e_C5 is missing from coins;
+    f_C6 is in coins only."""
+    ts = "coin_id string, exchange string, timestamp string"
+
+    def frame(rows, measures):
+        return spark.createDataFrame(rows, f"{ts}, {measures}").withColumn(
+            "timestamp", F.to_timestamp("timestamp")
+        )
+
+    t1, t2 = "2024-01-01 00:00:00", "2024-01-01 01:00:00"
+    nan = float("nan")
+    price = frame(
+        [("a_C1", "x", t2, 1.0, 5.0), ("a_C1", "x", t2, 2.0, 1.0),
+         ("a_C1", "x", t2, 2.0, 0.5), ("a_C1", "x", t1, 9.0, 9.0),
+         ("a_C1", "x", None, 99.0, 99.0),
+         ("b_C2", "y", t2, 100.0, 2.0), ("b_C2", "y", t2, nan, 1.0),
+         ("b_C2", "y", t2, None, 3.0),
+         ("c_C3", "x", None, 1.0, 1.0), ("c_C3", "x", None, 2.0, None),
+         ("d_C4", "x", t1, 1.0, 1.0), ("e_C5", "x", t1, 1.0, 1.0)],
+        "price double, volume double",
+    )
+    ohlc = frame(
+        [("a_C1", "x", t2, 1.0, 2.0, 0.5, 1.0), ("a_C1", "x", t2, 1.0, 3.0, 0.5, 1.0),
+         ("a_C1", "x", t1, 7.0, 7.0, 7.0, 7.0),
+         ("b_C2", "y", t1, 1.0, 1.0, 1.0, None), ("b_C2", "y", t1, 1.0, 1.0, 1.0, nan),
+         ("c_C3", "x", t1, 1.0, 1.0, 1.0, 1.0), ("e_C5", "x", t1, 1.0, 1.0, 1.0, 1.0)],
+        "open double, high double, low double, close double",
+    )
+    indicators = frame(
+        [("a_C1", "x", t2, 1.0, 1.0, None, 1.0), ("a_C1", "x", t2, 1.0, 1.0, 50.0, 0.0),
+         ("a_C1", "x", t2, 0.5, 9.0, 90.0, 9.0),
+         ("b_C2", "y", t1, None, None, None, None),
+         ("c_C3", "x", t2, 1.0, 2.0, 3.0, 4.0), ("d_C4", "x", t1, 1.0, 1.0, 1.0, 1.0),
+         ("e_C5", "x", t1, 1.0, 1.0, 1.0, 1.0)],
+        "sma_20 double, ema_20 double, rsi_14 double, macd double",
+    )
+    coins = spark.createDataFrame(
+        [(f"{c}_C{i}", f"Coin {i}", f"C{i}", "y" if c == "b" else "x")
+         for i, c in ((1, "a"), (2, "b"), (3, "c"), (4, "d"), (6, "f"))],
+        "id string, name string, symbol string, exchange string",
+    )
+    return coins, price, ohlc, indicators
+
+
+def test_coin_table_degenerate_inputs_match_oracle(spark):
+    """coin_table's one-shuffle max(struct) collapse picks, for every
+    degenerate case in _serving_frames, exactly the row the oracle's
+    LATEST_CTES row_number() collapse picks in DuckDB, and keeps the
+    oracle's inner-join semantics. Compared through Arrow, so a NaN and
+    a null are told apart."""
+    import duckdb
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans import serving
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.oracles import (
+        serving as oracle_sql,
+    )
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.registry import ORACLES
+
+    frames = _serving_frames(spark)
+    got = serving.coin_table(*frames).toArrow()
+    con = duckdb.connect()
+    for name, df in zip(("coins", "price_data", "ohlc_data", "technical_indicators"), frames):
+        con.register(name, df.toArrow())
+    select = ORACLES["coin_table"].split(oracle_sql.LATEST_CTES, 1)[1]
+    want = con.sql("WITH " + oracle_sql.LATEST_CTES + select).arrow()
+    con.close()
+
+    def rows(table):
+        cols = got.column_names
+        return sorted(
+            (tuple("NaN" if v != v else v for v in (r[c] for c in cols))
+             for r in table.to_pylist()),
+            key=lambda r: r[:4],
+        )
+
+    assert got.column_names == [
+        "id", "name", "symbol", "exchange", "price_ts", "price", "volume",
+        "open", "high", "low", "close", "sma_20", "ema_20", "rsi_14", "macd",
+    ]
+    assert rows(got) == rows(want)
+    by_id = {r[0]: r for r in rows(got)}
+    assert sorted(by_id) == ["a_C1", "b_C2", "c_C3"]
+    assert by_id["a_C1"][5:] == (2.0, 1.0, 1.0, 3.0, 0.5, 1.0, 1.0, 1.0, 50.0, 0.0)
+    assert by_id["b_C2"][5] == "NaN" and by_id["b_C2"][10] == "NaN"
+    assert by_id["c_C3"][4] is None and by_id["c_C3"][5] == 2.0
+
+
+def test_serving_routes_bind_parameters_and_leave_no_views(spark):
+    """Every SQL serving route binds the request's values as parameter
+    markers: a symbol carrying SQL text matches nothing. The temp views
+    that carry the input frames into the statement are gone after each
+    call, both when it returns and when it raises."""
+    from pyspark.errors import AnalysisException
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans import serving
+
+    coins, price, ohlc, indicators = _serving_frames(spark)
+    hostile = "C7' OR '1'='1"
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    before = views()
+    calls = {
+        "price_chart": lambda sym, rng="1y": serving.price_chart(price, sym, rng),
+        "ohlc_chart": lambda sym, rng="1y": serving.ohlc_chart(ohlc, sym, rng),
+        "indicator_chart": lambda sym, limit=200: serving.indicator_chart(
+            indicators, sym, limit),
+    }
+    for route, call in calls.items():
+        assert call("C1").count() > 0, route
+        assert views() == before, route
+        assert call(hostile).count() == 0, route
+        assert views() == before, route
+    assert serving.coin_table(coins, price, ohlc, indicators).count() == 3
+    assert views() == before
+
+    failing = {
+        "price_chart": lambda: calls["price_chart"]("C1", "2h"),
+        "ohlc_chart": lambda: calls["ohlc_chart"]("C1", "2h"),
+        "indicator_chart": lambda: calls["indicator_chart"]("C1", -1),
+        "coin_table": lambda: serving.coin_table(
+            coins, price, ohlc, indicators.drop("macd")),
+    }
+    for route, call in failing.items():
+        with pytest.raises((KeyError, AnalysisException)):
+            call()
+        assert views() == before, route

@@ -533,10 +533,12 @@ def test_no_driver_side_materialization_in_operator_paths():
 
 
 def test_plan_audit_pins_flagship_join_strategy(spark):
-    """The flagship coin_table plan must stay three BROADCAST hash
-    joins over WindowGroupLimit latest-per-group collapses — zero
-    sort-merge joins. plan_audit makes this driver-visible; this test
-    makes it fail locally first."""
+    """The flagship coin_table plan collapses all three fact tables to
+    their latest row per (coin_id, exchange) in ONE grouping shuffle of
+    max(struct) aggregates (the other three shuffles derive the facts
+    from events in-plan), then makes one BROADCAST hash join to coins:
+    no sort-merge join and no WindowGroupLimit. plan_audit makes this
+    driver-visible; this test makes it fail locally first."""
     from etl_visualization_of_cryptocurrency_trading_data_spark.plans.audit import (
         plan_features,
     )
@@ -546,11 +548,11 @@ def test_plan_audit_pins_flagship_join_strategy(spark):
 
     f = plan_features(QUERIES["coin_table"](spark, SF_SMOKE))
     assert f == {
-        "n_shuffles": 6,
-        "n_broadcasts": 3,
-        "n_broadcast_joins": 3,
+        "n_shuffles": 4,
+        "n_broadcasts": 1,
+        "n_broadcast_joins": 1,
         "n_sortmerge_joins": 0,
-        "n_window_group_limits": 6,
+        "n_window_group_limits": 0,
     }
 
 

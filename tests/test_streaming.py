@@ -549,11 +549,13 @@ def test_compact_table_preserves_rows_and_shrinks_files(spark, tmp_path, price_d
 
 
 def test_read_table_schema_cache_follows_every_rewrite(spark, tmp_path, price_df):
-    """read_table remembers a table's inferred schema, so a repeat read
-    launches no Spark job; every rewrite of the table directory (a new
-    partition, an upsert, a compaction, a delete-and-rewrite with an
-    extra column) makes the next read infer afresh. After each step the
-    schema and rows equal a fresh spark.read.parquet inference."""
+    """read_table keeps a table's read relation, so a repeat read
+    launches no Spark job; every change anywhere in the table tree (a new
+    partition, a file dropped by hand into an existing partition, an
+    upsert, a compaction, a delete-and-rewrite with an extra column)
+    makes the next read infer afresh. After each step the schema and rows
+    equal a fresh spark.read.parquet inference. A read from another
+    session returns a frame of that session."""
     base = str(tmp_path / "warehouse")
     path = sinks.table_dir(base, "price_data")
     sc = spark.sparkContext
@@ -585,6 +587,10 @@ def test_read_table_schema_cache_follows_every_rewrite(spark, tmp_path, price_df
     check("first-read")
     sinks.write_table(price_df.filter(F.col("exchange") == exchanges[0]), base, "price_data")
     check("new-exchange-partition")
+    part = os.path.join(path, f"exchange={exchanges[0]}")
+    first = sorted(f for f in os.listdir(part) if f.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(part, first), os.path.join(part, "dropped-by-hand.parquet"))
+    check("file-dropped-into-partition")
     newest = price_df.groupBy("coin_id", "exchange").agg(F.max("timestamp").alias("timestamp"))
     sinks.upsert_by_key(
         price_df.join(newest, ["coin_id", "exchange", "timestamp"])
@@ -598,6 +604,8 @@ def test_read_table_schema_cache_follows_every_rewrite(spark, tmp_path, price_df
     sinks.write_table(price_df.withColumn("extra", F.lit(1)), base, "price_data")
     check("rewrite-with-extra-column")
     assert "extra" in sinks.read_table(spark, base, "price_data").columns
+    other = spark.newSession()
+    assert sinks.read_table(other, base, "price_data").sparkSession is other
 
 
 def test_corrupt_envelope_dead_letter(spark, tmp_path):
