@@ -198,7 +198,7 @@ def main() -> None:
     # pre-pass, noop sink, per-query clearCache) — the A/A
     # adjudication harness for suspected regressions (r9 verdict
     # item #1). Default (unset OR effectively empty): the full
-    # registry. Unknown names (typos, demoted queries) are warned and
+    # registry. Unknown names (typos, deleted queries) are warned and
     # skipped, never a post-warmup KeyError — the same isolation
     # posture as the per-query error handling below. (Parsed up top,
     # before the session, so the calibration gate can see it.)

@@ -389,85 +389,6 @@ def minhash_lsh_pairs(
     return verified.filter(F.col("jaccard") >= threshold)
 
 
-def dup_clusters(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Connected components over a near-duplicate pair graph:
-    (doc_id, cluster_id) where cluster_id is the minimum doc_id
-    reachable through dup edges — the canonical representative. Keep
-    ``doc_id == cluster_id`` (plus unpaired docs) to dedup a corpus.
-
-    Pregel-style min-label propagation: each iteration joins labels
-    across edges and keeps the per-node minimum — the min label moves
-    one hop per round, so convergence takes O(component diameter)
-    rounds; each round is one shuffle join + one aggregation, and the
-    driver only reads a single changed-row count (no data collected).
-    Dup clusters are nearly cliques in practice (diameter ~2-3), so
-    the default bound is generous; if a pathological chain exceeds it
-    the function RAISES rather than returning wrong clusters.
-    """
-    # Persist the edge set once — every propagation round references it,
-    # and without a persist each round would recompute the whole
-    # upstream pair pipeline through lineage.
-    edges = (
-        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")
-            )
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    changed = -1
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnsRenamed({"doc_id": "dst", "cluster_id": "nb_label"}),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("nb_label").alias("nb_min"))
-        )
-        # Eager localCheckpoint, not persist (OPTIMIZATION_r15, guide
-        # §3.3/§5 — the same fix connected_components_star shipped):
-        # ``labels`` is referenced TWICE per round (the neighbor join
-        # above + the update join), so a persist leaves the LOGICAL
-        # plan doubling every round and the analyzer re-walks the
-        # whole history each iteration; the checkpoint truncates to a
-        # leaf. The changed-count below materialized this exact frame
-        # under the persist form too, so the data work is unchanged —
-        # measured ABAB at sf0.1: quality_survivors median
-        # 8.8 -> 7.0 s. Values identical.
-        updated = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nb_min", F.col("cluster_id"))
-                ).alias("new_cluster_id"),
-                "cluster_id",
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = updated.filter(
-            F.col("new_cluster_id") != F.col("cluster_id")
-        ).count()
-        labels = updated.select("doc_id", F.col("new_cluster_id").alias("cluster_id"))
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"dup_clusters did not converge within {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter"
-        )
-    return labels
-
-
 def simhash(documents: DataFrame, n: int = 3) -> DataFrame:
     """64-bit SimHash per document from shingle hashes: bit j of the
     fingerprint is the sign of sum over shingles of (+1 if bit j of
@@ -1474,16 +1395,16 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the scale-path twin of [[dup_clusters]]: returns the
-    same (doc_id, cluster_id = component-minimum id) labeling, but
-    converges in O(log n) alternation rounds instead of min-label
-    propagation's O(component diameter). On near-clique dup graphs
-    (diameter 2-3) the Pregel form wins on constant factors; on the
-    chain/filament components that URL graphs, citation graphs and
-    transitively-linked fuzzy-match graphs produce, diameter grows
-    with N and the star alternation is the only form whose round
-    count survives a 100x scale-up (a diameter-10k component costs
-    min-label 10k shuffle rounds but the star form ~14).
+    Beyond"): returns (doc_id, cluster_id = component-minimum id) for
+    every node of the pair graph — keep ``doc_id == cluster_id`` (plus
+    unpaired docs) to dedup a corpus. It converges in O(log n)
+    alternation rounds, where one-hop-per-round min-label propagation
+    needs O(component diameter): on the chain/filament components that
+    URL graphs, citation graphs and transitively-linked fuzzy-match
+    graphs produce, diameter grows with N (a diameter-10k component
+    costs min-label 10k shuffle rounds but the star form ~14), and even
+    on near-clique dup graphs min-label lost (an sf0.01 ABAB of both
+    survivors queries: star faster in 10/10 rounds, ~1.5x).
 
     Per round each star op is exactly two exchanges — one hash
     partition on the grouping node for the windowed neighborhood min,
@@ -1505,9 +1426,8 @@ def connected_components_star(
     connectivity and the node set; the fixed point is a star forest
     whose centers are the component minima. Convergence is verified
     structurally (new edge set == old edge set via left-anti + count,
-    exact on DISTINCT sets); like [[dup_clusters]], the function
-    RAISES rather than returning a wrong labeling if ``max_iter`` is
-    exceeded.
+    exact on DISTINCT sets); the function RAISES rather than returning
+    a wrong labeling if ``max_iter`` is exceeded.
     """
     from pyspark.sql.window import Window
 

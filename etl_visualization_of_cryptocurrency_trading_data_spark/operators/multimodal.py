@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 MEDIA_TYPES = ("image", "audio", "video")
 FEATURE_DIM = 8
@@ -2418,21 +2419,11 @@ def dhash_ppm(
 
 
 def _passthrough_cols(passthrough: str) -> list[str]:
-    """Column names of a ``passthrough`` schema fragment
-    ("width int, height int" -> ["width", "height"]).
-
-    The fragment is split on commas, so comma-bearing complex types
-    ("m map<int,int>") would mis-parse into phantom columns and fail
-    later with an opaque Arrow/schema error — raise here instead with
-    the real reason (ADVICE r14). Every current passthrough is flat
-    ints; a future complex column should extend this to a proper
-    DDL parse (pyspark.sql.types._parse_datatype_string)."""
-    if "<" in passthrough:
-        raise ValueError(
-            "passthrough schema fragments must use flat types (complex "
-            f"types would mis-split on commas): {passthrough!r}"
-        )
-    return [c.split()[0] for c in passthrough.split(",") if c.strip()]
+    """Column names of a ``passthrough`` DDL schema fragment
+    ("width int, height int" -> ["width", "height"]; "" -> []), parsed
+    by Spark's DDL parser so comma-bearing types ("d decimal(10,2)",
+    "m map<int,int>") stay one column."""
+    return DataType.fromDDL(passthrough).fieldNames()
 
 
 def perceptual_dup_clusters(
@@ -3110,7 +3101,10 @@ def multimodal_dedup_report(
     Output: one row per modality —
     (modality, n_docs, n_distinct_fp, n_clusters, n_dup_docs,
     max_cluster_size) — the corpus-curation dashboard a multimodal
-    training pipeline reads before choosing drop thresholds.
+    training pipeline reads before choosing drop thresholds. A modality
+    with no fingerprinted docs still gets its row (counts 0,
+    n_dup_docs and max_cluster_size NULL), as the oracle's aggregates
+    give.
     n_docs is the fingerprinted population (text counts docs with
     >= 3 words, the SimHash shingle floor). Per-modality verify
     distances follow each family's registered defaults (image 3,
@@ -3164,7 +3158,7 @@ def multimodal_dedup_report(
     ).persist()
     labeled = None
     for i, (name, _fps, _h) in enumerate(fams):
-        lab_i = lab_all.filter(F.col("doc_id") % 4 == i).select(
+        lab_i = lab_all.filter(F.pmod("doc_id", F.lit(4)) == i).select(
             F.shiftright(F.col("doc_id"), 2).alias("doc_id"),
             F.shiftright(F.col("cluster_id"), 2).alias("cluster_id"),
         )
@@ -3187,11 +3181,15 @@ def multimodal_dedup_report(
         .cast("long")
         .alias("n_distinct_fp")
     )
-    return stats.join(nfp, "modality").select(
+    modalities = documents.sparkSession.createDataFrame(
+        [(name,) for name, _fps, _h in fams], "modality string"
+    )
+    report = stats.join(nfp, "modality").join(modalities, "modality", "right")
+    return report.select(
         "modality",
-        "n_docs",
-        "n_distinct_fp",
-        "n_clusters",
+        F.coalesce("n_docs", F.lit(0)).alias("n_docs"),
+        F.coalesce("n_distinct_fp", F.lit(0)).alias("n_distinct_fp"),
+        F.coalesce("n_clusters", F.lit(0)).alias("n_clusters"),
         "n_dup_docs",
         "max_cluster_size",
     )

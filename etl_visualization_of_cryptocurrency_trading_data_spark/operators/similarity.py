@@ -165,7 +165,7 @@ def kmeans_centroids(
     is fully lazy — with fixed small ``iters`` the plan is a linear
     chain (each round's subtree consumed exactly once, no
     re-evaluation blow-up); for tens of rounds checkpoint each round
-    like dup_clusters does.
+    like [[dedup.connected_components_star]] does.
 
     ``centroid_limit=K`` replaces the modulus seed rule with a
     FIXED-SIZE one (``vec_id < K``) — same dial as [[knn_ivf]]'s:

@@ -47,17 +47,6 @@ def q_ngram_jaccard(spark, sf_dir):
         persist_intermediate=True,
     )
 
-def q_dup_clusters(spark, sf_dir):
-    """Canonical-doc resolution: connected components over the exact
-    near-dup pair graph (min-label propagation, SURVEY M8 extension)."""
-    # persist_intermediate stays OFF: dup_clusters persists the edge
-    # frame itself, and the posting cache on top of that measured as a
-    # net loss (0.25 s -> 0.39 s at sf0.1).
-    pairs = dedup.ngram_jaccard_pairs(
-        _documents(spark, sf_dir), n=3, threshold=0.5, max_df=NGRAM_MAX_DF
-    )
-    return dedup.dup_clusters(pairs)
-
 def q_minhash_lsh(spark, sf_dir):
     # md5 family: same banded-LSH plan as the xxhash64 production
     # default, but reproducible in DuckDB => full three-way oracle row.
@@ -68,15 +57,6 @@ def q_minhash_lsh(spark, sf_dir):
         threshold=0.5,
         hash_family="md5",
         persist_intermediate=True,
-    )
-
-def q_simhash_pairs(spark, sf_dir):
-    # md5 family for oracle reproducibility (see q_minhash_lsh).
-    # persist_intermediate OFF: the two self-join sides are IDENTICAL
-    # subtrees, so ReuseExchange already computes the fingerprints once
-    # (measured: no win from the cache).
-    return dedup.simhash_pairs(
-        _documents(spark, sf_dir), n=3, max_hamming=3, hash_family="md5"
     )
 
 def q_url_dedup(spark, sf_dir):
@@ -102,39 +82,6 @@ def q_url_dedup(spark, sf_dir):
     )
     return dedup.url_dedup(docs)
 
-def q_incremental_dedup(spark, sf_dir):
-    """Incremental exact dedup (dedup.incremental_dedup): the second
-    half of the corpus (by doc_id — "today's crawl") deduped within
-    itself and against the first half's fingerprint table ("everything
-    already ingested") — the batch-over-time dedup form production
-    pipelines run, vs exact_dedup's whole-corpus pass.
-
-    The fixtures plant NEAR-dups but zero exact dups, so the raw split
-    would only exercise the survive path (the r5 verdict's gap). The
-    increment therefore PLANTS both drop kinds in-engine: a re-crawl
-    of every 10th prior doc under a shifted id (must drop against the
-    seen table) and a second copy of every (10k+1)th new doc under a
-    higher id (must drop within-batch, min-doc_id survivor). The
-    surviving rows are exactly the original odd docs — and the driver
-    hash covers all three paths, because a failed drop adds rows."""
-    from pyspark.sql import functions as F
-
-    from ...functions.text import normalized_text
-
-    off = 10_000_000
-    docs = _documents(spark, sf_dir)
-    prior = docs.filter(F.col("doc_id") % 2 == 0)
-    new_base = docs.filter(F.col("doc_id") % 2 == 1)
-    recrawl = prior.filter(F.col("doc_id") % 10 == 0).withColumn(
-        "doc_id", F.col("doc_id") + off
-    )
-    within_dup = new_base.filter(F.col("doc_id") % 10 == 1).withColumn(
-        "doc_id", F.col("doc_id") + 2 * off
-    )
-    new = new_base.unionByName(recrawl).unionByName(within_dup)
-    seen = prior.select(F.md5(normalized_text(F.col("text"))).alias("fp")).distinct()
-    return dedup.incremental_dedup(new, seen)
-
 def q_incremental_dedup_bloom(spark, sf_dir):
     """Bloom-prefiltered incremental dedup
     (dedup.incremental_dedup_bloom) — the 100 TB form of the
@@ -147,10 +94,17 @@ def q_incremental_dedup_bloom(spark, sf_dir):
     deterministic xxhash64/seed/m family in build and probe), false
     positives removed by the exact verify — so the oracle IS the
     exact incremental-dedup SQL and the driver hash pins the
-    equivalence, exactly like salted_join_skew pins salting. Same
-    planted increment as q_incremental_dedup (re-crawled priors +
-    within-batch copies), so all three drop/survive paths flow
-    through the prefilter."""
+    equivalence, exactly like salted_join_skew pins salting. The plain
+    anti-join (dedup.incremental_dedup) shuffles the whole increment
+    against the seen table, which is why only this form is registered.
+
+    The fixtures plant NEAR-dups but zero exact dups, so the increment
+    (the odd half of the corpus by doc_id, deduped against the even
+    half's fingerprints) PLANTS both drop kinds in-engine: a re-crawl
+    of every 10th prior doc under a shifted id (must drop against the
+    seen table) and a second copy of every (10k+1)th new doc under a
+    higher id (must drop within-batch, min-doc_id survivor), so all
+    three drop/survive paths flow through the prefilter."""
     from pyspark.sql import functions as F
 
     from ...functions.text import normalized_text
@@ -384,7 +338,7 @@ def _simhash_hash_ctes(
     ``_phash_pair_ctes``/``_phash_label_ctes`` generators in ONE query
     (the multimodal report oracle runs four modality chains
     side-by-side, its text family at the scale-safe ``n_bits=128``
-    wide width). Bit values are identical to ``simhash_pairs``' md5
+    wide width). Bit values are identical to dedup.simhash_pairs' md5
     family: signed-bit sums over the first n_bits/4 hex chars of
     md5(shingle) parsed as 32-bit ints."""
     if n_bits not in (64, 128):
@@ -428,12 +382,13 @@ def _simhash_hash_ctes(
 
 def q_dedup_survivors(spark, sf_dir):
     """End-to-end dedup survivorship: near-dup pairs -> connected
-    components -> one canonical doc per cluster + all unique docs."""
+    components (dedup.connected_components_star) -> one canonical doc
+    per cluster + all unique docs."""
     docs = _documents(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs(
         docs, n=3, threshold=0.5, max_df=NGRAM_MAX_DF
     )
-    return corpus.dedup_survivors(docs, dedup.dup_clusters(pairs))
+    return corpus.dedup_survivors(docs, dedup.connected_components_star(pairs))
 
 # Ordering note: the driver's correctness gate checks the FIRST 50 entries
 # of this dict at each round.  Every query is pinned at sf0.001 by
@@ -508,8 +463,9 @@ def q_simhash_pairs_wide(spark, sf_dir):
     N^2/2^16 to N^2/2^32, which is what makes the candidate join
     linear at web-corpus scale (the 4x16 default measured 21.9x at
     10x data; this width knob-verified sub-linear — NOTES_r05 §3,
-    now driver-hash-verified here). Keeps the 64-bit entry as the
-    documented teaching/baseline form."""
+    now driver-hash-verified here). The 64-bit default is only a
+    cheaper fixture setting of the same operator, so it is not
+    registered."""
     return dedup.simhash_pairs(
         _documents(spark, sf_dir),
         n=3,
@@ -523,28 +479,28 @@ def q_quality_survivors(spark, sf_dir):
     within each near-dup cluster keep the HIGHEST-quality member —
     the production keep-rule (duplicates differ by boilerplate and
     truncation, so min-id/first-crawled is wrong). Composes the exact
-    ngram pair graph → min-label clusters → quality_score argmax per
+    ngram pair graph → log-round star connected components
+    (dedup.connected_components_star) → quality_score argmax per
     cluster (WindowGroupLimit top-1, ties on doc_id)."""
     docs = _documents(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs(
         docs, n=3, threshold=0.5, max_df=NGRAM_MAX_DF
     )
     return corpus.quality_survivors(
-        dedup.dup_clusters(pairs), text.quality_score(docs)
+        dedup.connected_components_star(pairs), text.quality_score(docs)
     )
 
 def q_dup_clusters_star(spark, sf_dir):
     """Log-round connected components
     (dedup.connected_components_star, Kiveris et al. 2014 alternating
-    large-star/small-star) — the scale-path twin of dup_clusters'
-    min-label propagation, on a fixture BUILT to break the Pregel
-    form: chain components of diameter ~127 (blocks of 64 consecutive
-    doc_ids chained, adjacent block pairs bridged), where min-label
-    needs ~127 shuffle rounds (its default max_iter=50 RAISES; pinned
-    in pytest) and the star alternation converges in ~7. Each round
-    is two exchanges per star op; the driver reads one changed-edge
-    indicator per round. Oracle: the dup_clusters recursive-CTE
-    reachability, over the same arithmetic edge construction."""
+    large-star/small-star) on a fixture BUILT to break one-hop-per-round
+    min-label propagation: chain components of diameter ~127 (blocks
+    of 64 consecutive doc_ids chained, adjacent block pairs bridged),
+    where min-label would need ~127 shuffle rounds and the star
+    alternation converges in ~7. Each round is two exchanges per star
+    op; the driver reads one changed-edge indicator per round. Oracle:
+    the recursive-CTE reachability of the survivors oracles, over the
+    same arithmetic edge construction."""
     from pyspark.sql import functions as F
 
     docs = _documents(spark, sf_dir).select("doc_id")
@@ -797,19 +753,6 @@ FROM documents GROUP BY 1""",
     "ngram_jaccard_pairs": f"""
 WITH {CAPPED_PAIRS_CTES}
 SELECT doc_id_a, doc_id_b, jaccard FROM pairs""",
-    "dup_clusters": f"""
-WITH RECURSIVE {CAPPED_PAIRS_CTES},
-edges AS (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_id_b AS a, doc_id_a AS b FROM pairs
-),
-reach(node, r) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM edges) n
-  UNION
-  SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r
-)
-SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node""",
     "dedup_survivors": f"""
 WITH RECURSIVE {CAPPED_PAIRS_CTES},
 edges AS (
@@ -828,7 +771,6 @@ SELECT d.doc_id, d.lang,
 FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id
 WHERE c.cluster_id IS NULL OR c.cluster_id = d.doc_id""",
     "minhash_lsh_pairs": _minhash_lsh_sql(),
-    "simhash_pairs": _simhash_sql(),
     # scale-safe width: 4x32-bit bands over md5's full 128 bits
     "simhash_pairs_wide": _simhash_sql(n_bits=128),
     "url_dedup": r"""
@@ -939,7 +881,6 @@ GROUP BY source""",
     # the hash pins the against-seen AND within-batch drop paths, not
     # just survive (r5 verdict item #5)
     "incremental_dedup_bloom": INCREMENTAL_DEDUP_SQL,
-    "incremental_dedup": INCREMENTAL_DEDUP_SQL,
     # blocked fuzzy record linkage: normalized 24-char names + planted
     # edit-distance-1 twins (substitution at char 13 — inside the name,
     # after the 8-char block prefix); block cap and length prefilter

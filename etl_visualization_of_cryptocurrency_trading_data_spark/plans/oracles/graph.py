@@ -11,14 +11,13 @@ from __future__ import annotations
 from ...operators import graph
 from .serving import PRICE_BASE_SQL, _price_base
 
-def _pagerank_ctes(cap: int = 2000) -> str:
+def _pagerank_ctes(cap: int) -> str:
     """Edge build + 3 integer-fixed-point PageRank rounds as CTEs;
     ``cap`` is graph.cooccurrence_edges' ``max_per_bucket`` guard —
-    2000 never binds on the fixtures (the teaching registration),
     3 BINDS at sf0.01 (max per-minute density is 4) and bounds the
     edge count to buckets * C(cap, 2) regardless of tick density
-    (the scale-safe registration ``coin_pagerank_capped``; the
-    uncapped minute-bucket build measured 103x edges at 10x data)."""
+    (the uncapped minute-bucket build measured 103x edges at 10x
+    data)."""
     return f"""base AS ({PRICE_BASE_SQL}),
 eh AS (SELECT DISTINCT coin_id AS e, date_trunc('minute', timestamp) AS h FROM base),
 ehc AS (
@@ -70,8 +69,6 @@ r3 AS (
   FROM nodes CROSS JOIN nn LEFT JOIN c3 ON nodes.id = c3.id
 )"""
 
-PAGERANK_CTES = _pagerank_ctes(2000)
-
 def q_exchange_influencers(spark, sf_dir):
     """Composition query: top-3 coins per exchange by co-movement
     PageRank — graph analytics joined back into the serving dimension
@@ -104,26 +101,12 @@ def q_exchange_influencers(spark, sf_dir):
         .select("exchange", "id", "rank", "wdeg", "rk")
     )
 
-def q_coin_pagerank(spark, sf_dir):
+def q_coin_pagerank_capped(spark, sf_dir):
     """Graph analytics (graph.cooccurrence_edges + graph.pagerank):
     undirected same-MINUTE co-occurrence graph over the tick stream,
-    then 3 weighted PageRank rounds — the second iterative dataflow
-    beside connected components, with the whole edge build + iteration
-    chain replayed in the oracle. Minute buckets keep the fixture graph
-    sparse (~136k edges at sf0.1 vs 6.8M hourly — per-bucket pair
-    growth is quadratic in bucket density, so bucket granularity is the
-    documented density dial, like max_df for postings)."""
-    from pyspark.sql import functions as F
-
-    price = _price_base(spark, sf_dir)
-    edges = graph.cooccurrence_edges(price, bucket="minute")
-    nodes = price.select(F.col("coin_id").alias("id")).distinct()
-    return graph.pagerank(edges, nodes, iters=3)
-
-def q_coin_pagerank_capped(spark, sf_dir):
-    """The SCALE-SAFE PageRank registration: identical iteration to
-    coin_pagerank, but the co-occurrence edge build runs with a
-    max_per_bucket cap that BINDS (3; max per-minute density at
+    then 3 weighted PageRank rounds, with the whole edge build +
+    iteration chain replayed in the oracle. The edge build runs with
+    a max_per_bucket cap that BINDS (3; max per-minute density at
     sf0.01 is 4) — per-bucket pair growth is the graph family's
     quadratic term (measured: 116k -> 11.9M edges, 103x, at 10x data
     with the non-binding 2000 default), and the deterministic
@@ -160,10 +143,6 @@ SELECT exchange, id, rank, wdeg, rk FROM (
          row_number() OVER (PARTITION BY split_part(id, '_C', 1)
                             ORDER BY rank DESC, id) AS rk
   FROM pr) WHERE rk <= 3""",
-    "coin_pagerank": f"""
-WITH {PAGERANK_CTES}
-SELECT r3.id, r3.r / 1000000000.0 AS rank, coalesce(w.wdeg, 0)::BIGINT AS wdeg
-FROM r3 LEFT JOIN wdeg w ON r3.id = w.id""",
     # scale-safe twin: the max_per_bucket guard BINDS (cap=3), bounding
     # edges to buckets * C(3,2) — the quadratic density term removed
     "coin_pagerank_capped": f"""

@@ -14,31 +14,14 @@ from ...operators import dedup, similarity
 from .common import _documents
 from .text import _BM25_SQL
 
-def q_knn_brute(spark, sf_dir):
-    return similarity.knn_brute(load_table(spark, sf_dir, "embeddings"), k=5)
-
-def q_kmeans_centroids(spark, sf_dir):
-    """Two Lloyd rounds from the deterministic init: per-cluster size
-    plus a digest of the refined centroid."""
-    from pyspark.sql import functions as F
-
-    cent = similarity.kmeans_centroids(
-        load_table(spark, sf_dir, "embeddings"), iters=2
-    )
-    return cent.select(
-        "cent_id",
-        "n_members",
-        similarity.digest_i6(F.col("cent")).alias("cent_digest"),
-    )
-
 def q_kmeans_fixed(spark, sf_dir):
     """The SCALE-SAFE k-means registration
     (similarity.kmeans_centroids centroid_limit=32): a fixed 32-seed
     init instead of the modulus rule's K = N/101 — per-round
     assignment cost N*K becomes linear in N (the modulus form
     measured 53x at 10x data; fixed K is the production shape, same
-    dial as knn_ivf_fixed). Two Lloyd rounds, same digest output as
-    the teaching form."""
+    dial as knn_ivf_fixed). Two Lloyd rounds; per-cluster size plus a
+    digest of the refined centroid."""
     from pyspark.sql import functions as F
 
     cent = similarity.kmeans_centroids(
@@ -84,9 +67,6 @@ def q_embedding_quantize(spark, sf_dir):
         ).alias("q_digest"),
     )
 
-def q_knn_lsh(spark, sf_dir):
-    return similarity.knn_lsh(load_table(spark, sf_dir, "embeddings"), k=5)
-
 def q_knn_lsh_multiprobe(spark, sf_dir):
     """Multiprobe sign-bit LSH (similarity.knn_lsh multiprobe=True):
     own bucket + all Hamming-1 buckets — the recall/cost dial, recall
@@ -98,7 +78,9 @@ def q_knn_lsh_multiprobe(spark, sf_dir):
 def q_knn_brute_vectorized(spark, sf_dir):
     """round_decimals=9 pins the BLAS-summation cosine to a precision
     where it equals the SQL left-fold dot product exactly, making the
-    result (incl. rank ties) oracle-checkable.
+    result (incl. rank ties) oracle-checkable. The row-form
+    similarity.knn_brute gives the same neighbors but ranks one row per
+    (corpus, probe) pair, so it serves only as knn_recall's truth.
 
     The probe matrix (the index-build step) is read locally with the
     modulo predicate pushed into the parquet scan (DuckDB), so only the
@@ -140,9 +122,6 @@ def q_knn_brute_vectorized(spark, sf_dir):
         round_decimals=9,
     )
 
-def q_knn_ivf(spark, sf_dir):
-    return similarity.knn_ivf(load_table(spark, sf_dir, "embeddings"), k=5)
-
 def q_knn_ivf_trained(spark, sf_dir):
     """IVF search against the TRAINED coarse index: kmeans_centroids'
     two Lloyd rounds feed knn_ivf's ``centroids=`` hook — one lazy
@@ -160,13 +139,6 @@ def q_knn_ivf_trained(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cent = similarity.kmeans_centroids(emb, iters=2).persist()
     return similarity.knn_ivf(emb, k=5, centroids=cent, persist_assignment=True)
-
-def q_embedding_dup(spark, sf_dir):
-    # persist_intermediate OFF: identical self-join subtrees hit
-    # ReuseExchange; forcing the cache measured 3.2 s -> 4.3 s at sf0.1.
-    return similarity.embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.5
-    )
 
 def q_knn_recall(spark, sf_dir):
     """ANN quality contract (similarity.knn_recall): recall@5 of the
@@ -329,7 +301,7 @@ def _kmeans_ctes(cent_where: str = "vec_id % 101 = 1") -> str:
     ``kmeans_centroids*`` oracles and the trained-centroid
     composition ``semantic_dedup_trained`` (which consumes c2 as its
     coarse index); ``cent_where`` picks the seed set — the modulus
-    default (K grows with N; teaching form) or the fixed-size rule
+    default (K grows with N) or the fixed-size rule
     (``vec_id < 32``; the scale-honest registrations)."""
     return f"""base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
 c0 AS (SELECT vec_id AS cent_id, emb AS cent FROM base WHERE {cent_where}),
@@ -468,7 +440,7 @@ def _knn_ivf_sql(
     base_sql: str = "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings",
 ) -> str:
     """IVF-flat oracle; ``cent_where`` picks the coarse index — the
-    modulus default (C grows with N; fixture/teaching form) or a
+    modulus default (C grows with N; the fixture form) or a
     fixed-size rule like ``vec_id < 32`` (constant C; the scale-honest
     registration ``knn_ivf_fixed``). ``probe_where`` picks the probe
     set — the %50 default's probe COUNT grows with N (injecting a
@@ -705,7 +677,8 @@ def q_knn_lsh_planes8(spark, sf_dir):
     n_planes=8): 256 buckets instead of 16 — candidates per probe fall
     16x, the dial that took the sf0.1→sf1 ratio from 18.6x to 2.0x
     (NOTES_r05 §3, knob-verified; driver-hash-verified here). The
-    4-plane entry stays as the high-recall fixture form; recall at 8
+    4-plane default keeps more recall, but its 16 buckets leave an
+    N^2/16 candidate term, so it is not registered; recall at 8
     planes is the documented cost of the bucket shrink.
 
     Re-planned r7 (verdict r6 item #3): 256 buckets over ~500 fixture
@@ -748,11 +721,12 @@ def q_embedding_dup_wide(spark, sf_dir):
     N²/2^8 per band instead of N²/2^4 — the knob NOTES_r05 §3
     measured taking the sf0.1→sf1 ratio from 52x to 3.5x, now
     driver-hash-verified with its own exact oracle (deterministic
-    plane literals shared with the SQL). The 16-plane entry stays as
-    the high-recall fixture form.
+    plane literals shared with the SQL). The 16-plane default (4-bit
+    bands) finds more fixture pairs, but its N^2/2^4 collisions per
+    band are quadratic at scale, so only this width is registered.
 
     The fixtures' planted cosine near-dups don't collide at 8-bit
-    band width (the registered 16-plane run finds exactly 1 pair at
+    band width (the 16-plane default finds exactly 1 pair at
     sf0.01; this config finds none), so the corpus PLANTS exact twins
     of every 25th vector under shifted ids — identical sign bits make
     every band collide, cosine 1 survives the verify, and the driver
@@ -807,27 +781,6 @@ def q_semantic_dup_components(spark, sf_dir):
     ).select(
         F.col("doc_id").alias("vec_id"),
         F.col("cluster_id").alias("component_id"),
-    )
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-style semantic dedup (similarity.semantic_dedup,
-    Abbas et al. 2023): assignment-only clustering onto the fixed
-    32-seed coarse index, then cosine>=0.9 near-dup detection ONLY
-    within each cluster — the pair space is sum_c(|c| choose 2)
-    instead of (N choose 2), the bound that makes embedding dedup
-    tractable at corpus scale. Like embedding_dup_wide, the corpus
-    PLANTS exact twins of every 25th vector under shifted ids (random
-    fixture vectors almost never exceed 0.9), so the driver hash
-    verifies clustering, within-cluster pairing, the drop rule, and
-    the smallest-id dup_of attribution on non-empty output."""
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    twins = emb.filter(F.col("vec_id") % 25 == 0).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(1_000_000)
-    )
-    return similarity.semantic_dedup(
-        emb.unionByName(twins), threshold=0.9, n_clusters=32
     )
 
 def q_semantic_dedup_trained(spark, sf_dir):
@@ -998,48 +951,6 @@ ORACLE_SQL: dict[str, str] = {
             " FROM embeddings WHERE vec_id % 25 = 0"
         ),
     ),
-    # SemDeDup replay: fixed-seed clustering -> within-cluster pairs
-    # -> smallest-id dup_of; same planted twins as embedding_dup_wide
-    "semantic_dedup": """
-WITH raw AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, embedding::DOUBLE[]
-  FROM embeddings WHERE vec_id % 25 = 0
-),
--- zero-norm guard: mirrors semantic_dedup's l2>0 filter exactly
-base AS (
-  SELECT vec_id, emb FROM raw WHERE sqrt(list_dot_product(emb, emb)) > 0
-),
-centroids AS (
-  SELECT vec_id AS cent_id, emb AS cent_emb FROM base WHERE vec_id < 32
-),
-scored AS (
-  SELECT vec_id, emb, cent_id,
-         list_dot_product(emb, cent_emb)
-         / (sqrt(list_dot_product(emb, emb)) * sqrt(list_dot_product(cent_emb, cent_emb))) AS cent_cos
-  FROM base CROSS JOIN centroids
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY vec_id
-                               ORDER BY cent_cos DESC, cent_id) AS crank
-  FROM scored
-),
-assigned AS (SELECT vec_id, emb, cent_id FROM ranked WHERE crank = 1),
-pairs AS (
-  SELECT a.cent_id AS cluster_id, a.vec_id AS id_a, b.vec_id AS id_b,
-         list_dot_product(a.emb, b.emb)
-         / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))) AS cosine
-  FROM assigned a JOIN assigned b
-    ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-),
-dups AS (SELECT * FROM pairs WHERE cosine >= 0.9),
-first_dup AS (
-  SELECT *, row_number() OVER (PARTITION BY id_b ORDER BY id_a) AS rn
-  FROM dups
-)
-SELECT id_b AS vec_id, cluster_id, id_a AS dup_of, cosine
-FROM first_dup WHERE rn = 1""",
     # trained-index SemDeDup: the _kmeans_ctes chain (c2 = trained
     # centroids, dims rounded to the shared 1e-9 grid per round) feeds
     # the same assignment/pair/drop replay as semantic_dedup
@@ -1108,8 +1019,6 @@ reach(node, r) AS (
 )
 SELECT node AS vec_id, min(r) AS component_id FROM reach GROUP BY node"""
     ),
-    "knn_brute": _knn_sql(bucketed=False),
-    "kmeans_centroids": _kmeans_sql(),
     # scale-safe seed rule: fixed K=32 (the modulus rule makes
     # K = N/101, i.e. N^2 assignment — measured 53x at 10x data)
     "kmeans_centroids_fixed": _kmeans_sql("vec_id < 32"),
@@ -1156,9 +1065,7 @@ SELECT vec_id,
          ',')) END AS q_digest
 FROM m""",
     "knn_brute_vectorized": _knn_sql(bucketed=False, round_decimals=9),
-    "knn_lsh": _knn_sql(bucketed=True),
     "knn_lsh_multiprobe": _knn_sql(bucketed=True, multiprobe=True),
-    "knn_ivf": KNN_IVF_SQL,
     # scale-safe configurations (r5 verdict item #2): fixed-C coarse
     # index / 256-bucket LSH, each with its own exact oracle
     "knn_ivf_fixed": _knn_ivf_sql("vec_id < 32"),
@@ -1273,7 +1180,6 @@ SELECT 'ivf_pq' AS method, n_probes::BIGINT AS n_probes, n_hits::BIGINT AS n_hit
        round(n_hits / (5.0 * n_probes), 6) >= 0.10 AS meets_floor
 FROM agg""",
     "knn_ivf_trained": KNN_IVF_TRAINED_SQL,
-    "embedding_dup_pairs": _embedding_dup_sql(),
     # RRF fusion of the BM25 replay (shared _BM25_SQL, nested WITH) and
     # the brute-cosine arm (list_dot_product idiom of the knn oracles);
     # ranks are row_number over (score DESC, id) AFTER each arm's

@@ -171,18 +171,13 @@ from .oracles.text import (  # noqa: F401
     _BM25_SQL,
 )
 from .oracles.similarity import (  # noqa: F401
-    q_knn_brute,
-    q_kmeans_centroids,
     q_kmeans_fixed,
     q_knn_quantized,
     q_embedding_normalize,
     q_embedding_quantize,
-    q_knn_lsh,
     q_knn_lsh_multiprobe,
     q_knn_brute_vectorized,
-    q_knn_ivf,
     q_knn_ivf_trained,
-    q_embedding_dup,
     q_knn_recall,
     q_knn_ivf_full_fixed,
     q_knn_ivf_pq_recall,
@@ -204,7 +199,6 @@ from .oracles.similarity import (  # noqa: F401
     q_knn_ivf_fixed,
     q_embedding_dup_wide,
     q_semantic_dup_components,
-    q_semantic_dedup,
     q_semantic_dedup_trained,
     q_semantic_dedup_capped,
     q_hybrid_retrieval_rrf,
@@ -265,9 +259,7 @@ from .oracles.streaming import (  # noqa: F401
 )
 from .oracles.graph import (  # noqa: F401
     _pagerank_ctes,
-    PAGERANK_CTES,
     q_exchange_influencers,
-    q_coin_pagerank,
     q_coin_pagerank_capped,
 )
 from .oracles.io_plans import (  # noqa: F401
@@ -281,11 +273,8 @@ from .oracles.dedup import (  # noqa: F401
     q_exact_dedup,
     NGRAM_MAX_DF,
     q_ngram_jaccard,
-    q_dup_clusters,
     q_minhash_lsh,
-    q_simhash_pairs,
     q_url_dedup,
-    q_incremental_dedup,
     q_incremental_dedup_bloom,
     q_dup_rate_by_source,
     _shingles_cte,
@@ -455,12 +444,9 @@ def q_plan_audit_skew(spark, sf_dir):
 # older than r5 except the ten yielded entries (r4).
 # ROUND-10 ROTATION EXECUTED per the r9 guidance (kept below) — see
 # the _R10_WINDOW_FRONT reorder after the QUERIES literal (and
-# PINNING.md for the per-query evidence map). The demotion trigger
-# FIRED this round (186 registrations pre-demotion, the ten teaching
-# forms = the r9 verdict's entire perf-weak list), so the nine
-# teaching-form r6 rows were demoted rather than rotated; their
-# verbatim oracles are exercised every run by
-# test_teaching_form_matches_oracle_after_demotion.
+# PINNING.md for the per-query evidence map). Ten perf-weak forms
+# with registered scale twins left the registry this round (since
+# deleted outright), so their r6 rows were not rotated.
 # ROUND-11 ROTATION EXECUTED per the r10 guidance (kept below) — see
 # _R11_WINDOW_FRONT after the QUERIES literal: (a) curation_pipeline_v3
 # (new) + the re-planned fuzzy_match_multipass and dsir_sample, (b)
@@ -589,12 +575,8 @@ def q_plan_audit_skew(spark, sf_dir):
 # spread_stream_replay and exact_dedup (r6 rows that yielded their r9
 # (d) slots to the mid-round registrations), (c) the ~33 remaining
 # r6-row entries not covered by the r9 window, oldest first in
-# registry order (simhash_pairs/semantic_dedup/incremental_dedup/
-# knn_lsh/knn_brute/knn_ivf/kmeans_centroids/dup_clusters/
-# embedding_dup_pairs are TEACHING forms — include them only if the
-# demotion trigger has NOT fired by then, else flip
-# DEMOTE_TEACHING_FORMS instead), then (d) the oldest r7-row entries
-# with any remaining slots.
+# registry order, then (d) the oldest r7-row entries with any
+# remaining slots.
 # The r8-written round-9 guidance (kept for history):
 # front-load (a) anything r9 adds or re-plans, (b) the remaining
 # ~30 r5-row entries not covered by the r8 window (dup_rate_by_source,
@@ -720,11 +702,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "restfeed_stream_replay": q_restfeed_stream_replay,
     "plan_audit": q_plan_audit,
     "embedding_dup_wide": q_embedding_dup_wide,
-    "semantic_dedup": q_semantic_dedup,
     "dedup_stream_replay": q_dedup_stream_replay,
     "coin_pagerank_capped": q_coin_pagerank_capped,
     "kmeans_centroids_fixed": q_kmeans_fixed,
-    "incremental_dedup": q_incremental_dedup,
     "ohlc_daily_rollup": q_ohlc_daily_rollup,
     "event_bigrams": q_event_bigrams,
     "restfeed_ohlc": q_restfeed_ohlc,
@@ -733,9 +713,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "exact_dedup": q_exact_dedup,
     "dedup_survivors": q_dedup_survivors,
     "ngram_jaccard_pairs": q_ngram_jaccard,
-    "dup_clusters": q_dup_clusters,
     "minhash_lsh_pairs": q_minhash_lsh,
-    "simhash_pairs": q_simhash_pairs,
     "pack_chunks_overlap": q_pack_chunks_overlap,
     "contamination": q_contamination,
     "curation_pipeline": q_curation_pipeline,
@@ -743,14 +721,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "tfidf_top_terms": q_tfidf_top_terms,
     "doc_length_quantiles_approx": q_doc_length_quantiles_approx,
     "exchange_cardinality": q_exchange_cardinality,
-    "knn_lsh": q_knn_lsh,
-    "knn_brute": q_knn_brute,
-    "knn_ivf": q_knn_ivf,
-    "kmeans_centroids": q_kmeans_centroids,
     "knn_quantized": q_knn_quantized,
     "embedding_normalize": q_embedding_normalize,
     "embedding_quantize": q_embedding_quantize,
-    "embedding_dup_pairs": q_embedding_dup,
     "media_frames": q_media_frames,
     "media_features": q_media_features,
     "stale_coins_anti": q_stale_coins_anti,
@@ -798,7 +771,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "price_resample_1h": q_price_resample_1h,
     "knn_pq_recall": q_knn_pq_recall,
     "session_stream_replay": q_session_stream_replay,
-    "coin_pagerank": q_coin_pagerank,
     "price_anomalies": q_price_anomalies,
     "forecast_backtest": q_forecast_backtest,
     "bpe_merges": q_bpe_merges,
@@ -962,11 +934,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # (de-spilled block self-join, hash-unchanged — the fresh row
 # re-verifies the re-plan); (b) the mid-r8 repeated_spans_sliding —
 # the ONLY registered query that has never had a driver row; (c) ALL
-# 31 remaining r5-row entries (the oldest evidence left; includes the
-# teaching-form coin_pagerank — §7's no-front-load preference yields
-# to the no-row-older-than-r6 done-criterion); (d) 14 oldest r6-row
-# entries in registry order, skipping TEACHING_FORMS members
-# (semantic_dedup, incremental_dedup — their twins are in or newer);
+# 31 remaining r5-row entries (the oldest evidence left); (d) 14
+# oldest r6-row entries in registry order;
 # spread_stream_replay and exact_dedup (r6 rows, safe to age one more
 # round) yielded their (d) slots to the two mid-round (a)
 # registrations. After the r9 driver run: zero never-checked
@@ -1143,27 +1112,20 @@ _ORACLE_REGISTRATION_ORDER = [
     "doc_length_quantiles_approx",
     "exact_dedup",
     "ngram_jaccard_pairs",
-    "dup_clusters",
     "dedup_survivors",
     "minhash_lsh_pairs",
     "leakage_safe_split",
     "curation_pipeline_v3",
-    "simhash_pairs",
     "simhash_pairs_wide",
     "embedding_dup_wide",
-    "semantic_dedup",
     "semantic_dedup_trained",
     "semantic_dedup_capped",
-    "knn_brute",
-    "kmeans_centroids",
     "kmeans_centroids_fixed",
     "knn_quantized",
     "embedding_normalize",
     "embedding_quantize",
     "knn_brute_vectorized",
-    "knn_lsh",
     "knn_lsh_multiprobe",
-    "knn_ivf",
     "knn_ivf_fixed",
     "knn_ivf_full_fixed",
     "knn_lsh_planes8",
@@ -1191,7 +1153,6 @@ _ORACLE_REGISTRATION_ORDER = [
     "knn_ivf_pq_recall",
     "media_decode_wav",
     "knn_ivf_trained",
-    "embedding_dup_pairs",
     "media_metadata",
     "frame_schedule",
     "media_features",
@@ -1262,7 +1223,6 @@ _ORACLE_REGISTRATION_ORDER = [
     "enrich_stream_replay",
     "cms_frequencies",
     "zorder_profile",
-    "incremental_dedup",
     "spread_stream_replay",
     "volume_profile",
     "bpe_vocab_k",
@@ -1271,7 +1231,6 @@ _ORACLE_REGISTRATION_ORDER = [
     "bpe_merges",
     "forecast_backtest",
     "price_anomalies",
-    "coin_pagerank",
     "coin_pagerank_capped",
     "session_stream_replay",
     "session_range_join",
@@ -1358,45 +1317,3 @@ assert set(_merged_oracles) == set(_ORACLE_REGISTRATION_ORDER), (
 ORACLES: dict[str, str] = {
     _k: _merged_oracles[_k] for _k in _ORACLE_REGISTRATION_ORDER
 }
-
-# ---------------------------------------------------------------------------
-# Teaching-form demotion pre-positioning (r8 verdict item #5 /
-# NOTES_r08 §7). These ten registrations are LABELED TEACHING FORMS —
-# each documents a measured scale defect next to its scale-safe twin
-# (e.g. coin_pagerank uncapped vs coin_pagerank_capped). Policy: they
-# STAY registered until the written trigger fires (~200 queries in the
-# registry OR the full sf0.01 sweep exceeds ~30 min); when it does,
-# flip DEMOTE_TEACHING_FORMS to True — the forms leave QUERIES/ORACLES
-# (and therefore the driver window, bench, and the main parity
-# parametrization) but their (query fn, oracle SQL) pairs survive
-# VERBATIM in TEACHING, which tests/test_oracle_parity.py re-checks at
-# the driver's sf the moment they are demoted. One line, no evidence
-# lost.
-# ---------------------------------------------------------------------------
-TEACHING_FORMS = [
-    "knn_lsh",             # 4-plane LSH; scale twin knn_lsh_planes8
-    "knn_brute",           # row-form brute cosine; twin knn_brute_vectorized
-    "kmeans_centroids",    # modulus seeding; twin kmeans_centroids_fixed
-    "coin_pagerank",       # uncapped edge build; twin coin_pagerank_capped
-    "embedding_dup_pairs", # 4-bit bands; twin embedding_dup_wide
-    "simhash_pairs",       # 64-bit narrow; twin simhash_pairs_wide
-    "semantic_dedup",      # untrained, uncapped; twin semantic_dedup_capped
-    "knn_ivf",             # %50-probe rule; twin knn_ivf_full_fixed
-    "dup_clusters",        # min-label propagation; twin dup_clusters_star
-    "incremental_dedup",   # exact anti-join; twin incremental_dedup_bloom
-]
-TEACHING: dict[str, tuple] = {
-    k: (QUERIES[k], ORACLES[k]) for k in TEACHING_FORMS
-}
-# FLIPPED r10 (r9 verdict item #3): the trigger is met — 186
-# registrations pre-demotion crosses the ~200 line during r10-r11,
-# and the ten forms were the r9 verdict's entire perf-weak list.
-# Their (query fn, oracle SQL) pairs survive VERBATIM in TEACHING and
-# are value-checked at the driver's sf on every pytest run by
-# test_teaching_form_matches_oracle_after_demotion (the previously
-# dormant twin).
-DEMOTE_TEACHING_FORMS = True
-if DEMOTE_TEACHING_FORMS:
-    for _k in TEACHING_FORMS:
-        QUERIES.pop(_k)
-        ORACLES.pop(_k)

@@ -12,7 +12,9 @@ re-rendered in place; the others are left as they are.
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -136,6 +138,11 @@ SCAN_DETAIL = {
     "price_chart_stored",
 }
 
+# sinks.scratch_dir stamps this process's pid on stored-table dirs
+# (<tempdir>/<prefix>_<pid>); the pid is rewritten to a fixed token so a
+# re-render of an unchanged plan leaves EXPLAIN.md byte-identical
+_PID_DIR = re.compile(rf"({re.escape(tempfile.gettempdir())}/\w+)_{os.getpid()}\b")
+
 
 def render(spark, name: str, sf_dir: str) -> list[str]:
     """One query's EXPLAIN.md section, as lines."""
@@ -143,6 +150,7 @@ def render(spark, name: str, sf_dir: str) -> list[str]:
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    plan = _PID_DIR.sub(r"\1_<pid>", plan)
     # keep the operator tree, drop the verbose per-node detail dump
     # — except the Scan blocks for SCAN_DETAIL queries, where
     # PushedFilters/ReadSchema are the evidence

@@ -243,14 +243,6 @@ NOTES: dict[str, str] = {
     ),
 }
 
-DEMOTED_FOOTER = (
-    "Demoted teaching forms (newest driver row at demotion): "
-    "coin_pagerank (r9), dup_clusters (r6), embedding_dup_pairs (r6), "
-    "incremental_dedup (r6), kmeans_centroids (r6), knn_brute (r6), "
-    "knn_ivf (r6), knn_lsh (r6), semantic_dedup (r6), simhash_pairs (r6)."
-)
-
-
 def newest_rows(max_round: int | None = None) -> tuple[dict[str, int], int]:
     """Newest green driver row per query. ``max_round`` bounds the
     artifacts considered (inclusive) so a round-N map is reproducible
@@ -302,10 +294,7 @@ def render(round_n: int) -> str:
         "",
         f"Generated by scripts/regenerate_pinning.py from "
         f"CORRECTNESS_r{{01..{prev:02d}}}.json at the r{round_n} rotation. One row",
-        "per registered query (the ten TEACHING forms demoted in r10 remain",
-        "value-checked every pytest run by",
-        "test_teaching_form_matches_oracle_after_demotion, drift-pinned by",
-        "test_teaching_form_drift_tripwire).",
+        "per registered query.",
         "",
         "- **newest driver row** — the last round whose driver correctness",
         "  window included the query with a green hash (never = no driver row",
@@ -335,7 +324,7 @@ def render(round_n: int) -> str:
         else:
             w = ""
         lines.append(f"| {q} | {age} | {w} | {note} |")
-    lines += ["", DEMOTED_FOOTER, ""]
+    lines.append("")
     return "\n".join(lines)
 
 

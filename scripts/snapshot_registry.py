@@ -4,10 +4,9 @@ Writes tests/fixtures/registry_snapshot.json capturing EVERYTHING the
 r10 verdict's item #2 requires to stay byte-identical across the
 plans/registry.py -> plans/oracles/ package refactor:
 
-- the post-demotion QUERIES key order and each builder's __name__,
-- the post-demotion ORACLES key order and the sha256 of every rendered
-  oracle SQL string,
-- the TEACHING map (fn name + sql sha256 per demoted form).
+- the QUERIES key order and each builder's __name__,
+- the ORACLES key order and the sha256 of every rendered oracle SQL
+  string.
 
 First generated from the PRE-refactor single-file registry so the
 split could be proven byte-identical;
@@ -38,9 +37,6 @@ snap = {
     "builder_names": {k: fn.__name__ for k, fn in registry.QUERIES.items()},
     "oracles_order": list(registry.ORACLES),
     "oracle_sha256": {k: sha(v) for k, v in registry.ORACLES.items()},
-    "teaching": {
-        k: [fn.__name__, sha(sql)] for k, (fn, sql) in registry.TEACHING.items()
-    },
 }
 
 out = pathlib.Path(__file__).resolve().parents[1] / "tests" / "fixtures"
@@ -48,6 +44,5 @@ out.mkdir(exist_ok=True)
 (out / "registry_snapshot.json").write_text(json.dumps(snap, indent=1) + "\n")
 print(
     f"wrote {out/'registry_snapshot.json'}: "
-    f"{len(snap['queries_order'])} queries, {len(snap['oracles_order'])} oracles, "
-    f"{len(snap['teaching'])} teaching forms"
+    f"{len(snap['queries_order'])} queries, {len(snap['oracles_order'])} oracles"
 )

@@ -187,17 +187,6 @@ def test_ngram_max_df_filtered_universe_semantics(spark):
     assert (0, 1) in uncapped
 
 
-def test_dup_clusters_chain_graph(spark):
-    """Min-label propagation must cross multiple hops: a 5-node chain
-    collapses to one cluster labeled by its minimum doc_id."""
-    pairs = spark.createDataFrame(
-        [(2, 3), (3, 4), (4, 5), (5, 6), (10, 11)],
-        "doc_id_a long, doc_id_b long",
-    )
-    got = {r.doc_id: r.cluster_id for r in dedup.dup_clusters(pairs).collect()}
-    assert got == {2: 2, 3: 2, 4: 2, 5: 2, 6: 2, 10: 10, 11: 10}
-
-
 def test_knn_ivf_neighbors_plausible(spark):
     """IVF candidates come only from the probe's n_probe nearest lists;
     every reported neighbor must rank in the probe's exact top-50."""
@@ -2092,35 +2081,15 @@ def test_pca_top_component_rayleigh_contract(spark):
     assert abs(got.var() - lam) <= 2e-4 * max(1.0, lam)
 
 
-def test_connected_components_star_matches_dup_clusters(spark):
-    """The log-round star alternation and Pregel min-label must agree
-    label-for-label on a real near-dup pair graph (same canonical
-    minimum per component)."""
-    docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_df=None).select(
-        "doc_id_a", "doc_id_b"
-    )
-    pregel = {r.doc_id: r.cluster_id for r in dedup.dup_clusters(pairs).collect()}
-    star = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components_star(pairs).collect()
-    }
-    assert len(pregel) > 0
-    assert star == pregel
-
-
 def test_connected_components_star_log_rounds_on_long_chain(spark):
     """The reason the star form exists: a 121-node chain has diameter
-    120, so min-label propagation moves the label one hop per round
-    (max_iter=6 must RAISE; 6 is also past where its 2x-per-round
-    logical-plan growth stays cheap) while the star alternation
-    converges within 12 checkpoint-truncated rounds — and still labels
-    every node with the chain minimum."""
+    120, so min-label propagation would move the label one hop per
+    round (120 rounds) while the star alternation converges within 12
+    checkpoint-truncated rounds — and still labels every node with the
+    chain minimum."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7, 127)], "doc_id_a long, doc_id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_clusters(pairs, max_iter=6)
     got = {
         r.doc_id: r.cluster_id
         for r in dedup.connected_components_star(pairs, max_iter=12).collect()
@@ -3217,3 +3186,41 @@ def test_multimodal_dedup_report_matches_per_modality_recount(spark):
         assert got[name] == want, (name, got[name], want)
         assert want[3] > 0, f"{name} fixture slice has no dup cluster"
     spark.catalog.clearCache()
+
+
+def test_multimodal_dedup_report_keeps_empty_modalities(spark):
+    """A modality with no fingerprinted docs keeps its report row with
+    the oracle's empty-aggregate values (counts 0, n_dup_docs and
+    max_cluster_size NULL): here every text is under the 3-word shingle
+    floor and the audio table is empty."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators import multimodal
+
+    docs = load_table(spark, SF_SMOKE, "documents").orderBy("doc_id").limit(30)
+    rows = {
+        r["modality"]: r
+        for r in multimodal.multimodal_dedup_report(
+            docs.withColumn("text", F.lit("two words")),
+            multimodal.ppm_table(docs),
+            multimodal.wav_table(docs).limit(0),
+            multimodal.gif_table_animated(docs),
+        ).collect()
+    }
+    assert set(rows) == {"text", "image", "audio", "video"}
+    cols = ["n_docs", "n_distinct_fp", "n_clusters", "n_dup_docs", "max_cluster_size"]
+    for name in ("text", "audio"):
+        assert [rows[name][c] for c in cols] == [0, 0, 0, None, None], name
+    for name in ("image", "video"):
+        assert rows[name]["n_docs"] > 0, name
+    spark.catalog.clearCache()
+
+
+def test_passthrough_cols_parses_ddl(spark):
+    """Passthrough fragments are parsed as DDL, so a comma inside a type
+    (decimal precision, map key/value) does not split a column."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators.multimodal import (
+        _passthrough_cols,
+    )
+
+    assert _passthrough_cols("w int, d decimal(10,2)") == ["w", "d"]
+    assert _passthrough_cols("m map<int,int>, w int") == ["m", "w"]
+    assert _passthrough_cols("") == []

@@ -105,91 +105,6 @@ def test_query_matches_oracle(spark, duck, duck_driver_sf, name):
     assert_frames_match(sdf, odf, name)
 
 
-def test_teaching_form_matches_oracle_after_demotion(spark, duck, duck_driver_sf):
-    """Demotion safety net (r8 verdict item #5 / NOTES_r08 §7): the ten
-    labeled teaching forms keep their VERBATIM oracle parity check here
-    the moment they are demoted out of the registry (flip
-    registry.DEMOTE_TEACHING_FORMS at the written trigger). While they
-    are still registered this is a no-op — test_query_matches_oracle
-    already covers them at the driver's sf — so arming the twin costs
-    nothing today. Set SPARK_GRAFT_FORCE_TEACHING_PARITY=1 to exercise
-    this path pre-demotion (used once to prove the twin passes)."""
-    from etl_visualization_of_cryptocurrency_trading_data_spark.plans import registry
-
-    force = os.environ.get("SPARK_GRAFT_FORCE_TEACHING_PARITY") == "1"
-    pending = [
-        n for n in sorted(registry.TEACHING)
-        if force or n not in registry.QUERIES
-    ]
-    if not pending:
-        pytest.skip("teaching forms still registered — covered by the main gate")
-    for name in pending:
-        fn, sql = registry.TEACHING[name]
-        sf_dir = SF_DRIVER if os.path.isdir(SF_DRIVER) else SF_SMOKE
-        con = duck_driver_sf if sf_dir != SF_SMOKE else duck
-        assert_frames_match(fn(spark, sf_dir).toPandas(), con.sql(sql).df(), name)
-
-
-# r10 verdict item #6: the demoted teaching pairs are no longer in the
-# driver window, so test_teaching_form_matches_oracle_after_demotion is
-# their ONLY evidence. This fixture pins sha256(fn source + oracle SQL)
-# per pair — any edit to a teaching form's function or oracle fails here
-# until the fixture is updated IN THE SAME COMMIT, which forces the
-# editor to re-run the parity twin consciously rather than silently
-# rotting un-driver-checked surface. Regenerate with:
-#   python -c "import hashlib, inspect;
-#     from etl_visualization_of_cryptocurrency_trading_data_spark.plans import registry;
-#     [print(n, hashlib.sha256((inspect.getsource(f) + chr(0) + s).encode()).hexdigest()[:16])
-#      for n, (f, s) in sorted(registry.TEACHING.items())]"
-TEACHING_FINGERPRINTS = {
-    "coin_pagerank": "d46ee475a635d9ca",
-    "dup_clusters": "1c1cfcd856bd89ba",
-    "embedding_dup_pairs": "4b8c0c775019e717",
-    # updated r11: the plans/oracles split moved the builder one package
-    # level deeper, so its function-local import gained a dot
-    # (from ..functions -> from ...functions); semantics unchanged and
-    # test_teaching_form_matches_oracle_after_demotion re-verified.
-    "incremental_dedup": "9ae8f1b8ca829750",
-    "kmeans_centroids": "cf058653ee40c1df",
-    "knn_brute": "a8f73cb0e1a73a10",
-    "knn_ivf": "5f904c00d87790bd",
-    "knn_lsh": "b99d85a0e978db81",
-    "semantic_dedup": "6ec195dcd386a746",
-    "simhash_pairs": "fc3005d8d3dce568",
-}
-
-
-def test_teaching_form_drift_tripwire():
-    """The demoted (query fn, oracle SQL) pairs must not drift without
-    the editor acknowledging it here (r10 verdict item #6): hash each
-    pair's function source + SQL and compare against the pinned
-    fingerprint fixture above."""
-    import hashlib
-    import inspect
-
-    from etl_visualization_of_cryptocurrency_trading_data_spark.plans import registry
-
-    got = {
-        name: hashlib.sha256(
-            (inspect.getsource(fn) + "\x00" + sql).encode()
-        ).hexdigest()[:16]
-        for name, (fn, sql) in registry.TEACHING.items()
-    }
-    drifted = {
-        n: (TEACHING_FINGERPRINTS.get(n), h)
-        for n, h in got.items()
-        if TEACHING_FINGERPRINTS.get(n) != h
-    }
-    assert not drifted, (
-        "teaching form(s) changed without updating the fingerprint "
-        f"fixture (expected, got): {drifted} — re-run "
-        "test_teaching_form_matches_oracle_after_demotion (or force it "
-        "with SPARK_GRAFT_FORCE_TEACHING_PARITY=1) and update "
-        "TEACHING_FINGERPRINTS in the same commit"
-    )
-    assert set(got) == set(TEACHING_FINGERPRINTS)
-
-
 def test_registry_snapshot_is_byte_identical():
     """r10 verdict item #2 guard: the plans/registry.py ->
     plans/oracles/ package split must be a PURE refactor. The fixture
@@ -199,10 +114,9 @@ def test_registry_snapshot_is_byte_identical():
     single-file registry at commit eb932cc (history: that arm proved
     the split byte-identical) and is regenerated in the same commit as
     any legitimate registry change, so the guard pins the CURRENT
-    surface against accidental rendering drift. It pins the
-    post-demotion QUERIES key order + builder names, the ORACLES key
-    order + sha256 of every rendered SQL string, and the TEACHING
-    pairs. Any rendering change
+    surface against accidental rendering drift. It pins the QUERIES
+    key order + builder names and the ORACLES key order + sha256 of
+    every rendered SQL string. Any rendering change
     — reordered keys, a re-rendered f-string fragment, a renamed
     builder — fails here. Legitimate registry changes (new/changed
     queries in later rounds) regenerate the fixture in the same
@@ -229,9 +143,6 @@ def test_registry_snapshot_is_byte_identical():
         if sha(v) != snap["oracle_sha256"][k]
     ]
     assert not mismatched, f"oracle SQL re-rendered differently: {mismatched}"
-    assert {
-        k: [fn.__name__, sha(sql)] for k, (fn, sql) in registry.TEACHING.items()
-    } == snap["teaching"]
 
 
 def test_all_queries_run_on_empty_tables(spark, tmp_path):
