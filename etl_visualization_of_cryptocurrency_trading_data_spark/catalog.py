@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import sinks
+
 TABLES = (
     "region",
     "nation",
@@ -65,6 +67,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     semantics.
     ``tests/test_sql_api.py::test_fixture_timestamp_dtypes`` is the
     canary that fails loudly if the encoding changes again.
+
+    Relation cache: the normalized frame is kept by
+    [[sinks.cached_relation]] (the read cache ``sinks.read_table`` uses),
+    so a later call for the same unchanged table in the same session
+    returns the same frame with no listing and no schema-inference job
+    (~100 ms of a ~190 ms ``_price_base`` build at sf0.01 on 4 cores;
+    a hit costs under 1 ms). The two conf pins above still run on every
+    call, before the lookup, so a cached frame is always read under the
+    confs it was normalized with. Blind spots are the cache's: a fixture
+    directory whose part file is rewritten in place under its name, or a
+    change within one file-system timestamp tick, is served stale until
+    some other change; a replaced or rewritten single-file table is
+    seen. Callers share the frame, so two calls give the same attribute
+    ids (join them as a self-join).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -82,14 +98,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             stacklevel=2,
         )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    dtypes = dict(df.dtypes)
-    if name == "events" and dtypes.get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    for col, dt in dtypes.items():
-        if dt == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+    path = table_path(sf_dir, name)
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        dtypes = dict(df.dtypes)
+        if name == "events" and dtypes.get("ts") == "bigint":
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        for col, dt in dtypes.items():
+            if dt == "timestamp_ntz":
+                df = df.withColumn(col, F.col(col).cast("timestamp"))
+        return df
+
+    return sinks.cached_relation(spark, path, read)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

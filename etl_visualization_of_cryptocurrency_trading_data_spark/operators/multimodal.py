@@ -24,7 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
@@ -3071,6 +3071,23 @@ def video_dup_drops(media: DataFrame, max_hamming: int = 1) -> DataFrame:
     ).select("doc_id")
 
 
+#: rep ids the report's tag encoding carries exactly: ``id * 4 + tag``
+#: stays a non-negative long and decodes by ``shiftright``/``pmod``
+_REP_ID_LIMIT = 1 << 61
+
+
+def _tag_rep_id(col: str, tag: int) -> Column:
+    """``col * 4 + tag`` (shiftleft), raising ``USER_RAISED_EXCEPTION``
+    on a rep id outside [0, 2^61): a negative id breaks the ``pmod``
+    decode and a larger one overflows the shift, and either would
+    silently merge or mislabel clusters."""
+    c = F.col(col)
+    return F.when(
+        (c < 0) | (c >= F.lit(_REP_ID_LIMIT)),
+        F.raise_error(F.concat(F.lit(f"{col} outside [0, 2^61): "), c.cast("string"))),
+    ).otherwise(F.shiftleft(c, 2) + F.lit(tag))
+
+
 def multimodal_dedup_report(
     documents: DataFrame,
     images: DataFrame,
@@ -3146,8 +3163,8 @@ def multimodal_dedup_report(
         reps_l.append(reps.persist())
         pairs_l.append(
             pairs.select(
-                (F.shiftleft(F.col("rep_id_a"), 2) + F.lit(i)).alias("rep_id_a"),
-                (F.shiftleft(F.col("rep_id_b"), 2) + F.lit(i)).alias("rep_id_b"),
+                _tag_rep_id("rep_id_a", i).alias("rep_id_a"),
+                _tag_rep_id("rep_id_b", i).alias("rep_id_b"),
             )
         )
     union_pairs = pairs_l[0]

@@ -26,6 +26,8 @@ executor-side parquet — no driver funnel.
 from __future__ import annotations
 
 import os
+import stat
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -249,15 +251,22 @@ def compact_table(
     )
 
 
-# One read relation per table directory (absolute path): the tree's
-# directory stamps at read time, the session that read it, and the frame.
-# See read_table.
+# One read relation per parquet path (absolute): the path's stamps at
+# read time, the session that read it, and the frame. See
+# cached_relation.
 _RELATIONS: dict[str, tuple[tuple, SparkSession, DataFrame]] = {}
 
 
 def _tree_stamp(path: str) -> tuple:
     """``(path, st_ino, st_mtime_ns)`` of every directory in the table
-    tree, in walk order; empty for a missing table."""
+    tree, in walk order; ``(path, st_ino, st_mtime_ns, st_size)`` of a
+    single-file table; empty for a missing table."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return ()
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_ino, st.st_mtime_ns, st.st_size),)
     stamp = []
     for root, _, _ in os.walk(path):
         try:
@@ -268,41 +277,65 @@ def _tree_stamp(path: str) -> tuple:
     return tuple(stamp)
 
 
-def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
-    """Read a table written by the writers above.
+def cached_relation(
+    spark: SparkSession, path: str, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame ``read()`` builds for the parquet table at ``path``,
+    kept for later calls while the table is unchanged.
 
     A parquet read costs a schema-inference job and a file listing, and
-    on a small serving read both cost more than the scan. So a read keeps
-    the whole relation (the frame with its inferred schema and its file
-    listing), keyed on the table directory's absolute path, and a later
-    read in the same session returns that frame while the table tree is
-    unchanged: every directory in it has the ``(st_ino, st_mtime_ns)`` it
-    had when the frame was read. Adding, removing or renaming a file or
-    directory anywhere in the tree changes its parent directory's stamp,
-    so every writer here invalidates the entry: a new ``exchange=``/
-    ``batch_epoch=`` partition, the files and ``_temporary`` churn of
-    an append into an existing partition, and the directory swap of
+    on a small read both cost more than the scan. So the whole relation
+    (the frame with its inferred schema and its file listing) is kept,
+    keyed on the absolute path, and a later call in the same session
+    returns that frame while the table is unchanged: every directory in
+    its tree has the ``(st_ino, st_mtime_ns)`` it had when the frame was
+    read, or a single-file table has the same inode, mtime and size.
+    Adding, removing or renaming a file or directory anywhere in a tree
+    changes its parent directory's stamp, so every writer here
+    invalidates the entry: a new ``exchange=``/``batch_epoch=``
+    partition, the files and ``_temporary`` churn of an append into an
+    existing partition, and the directory swap of
     ``upsert_by_key``/``compact_table``. So does a file dropped into a
-    partition by hand. A read from another session reads afresh, so the
-    frame always belongs to the session that asked for it.
+    partition by hand, and a single file replaced or rewritten. A call
+    from another session reads afresh, so the frame always belongs to
+    the session that asked for it. One path has one reader: the entry
+    keeps whichever ``read`` filled it.
 
-    Blind spots: a file rewritten in place under an existing name (no
-    directory entry changes) is not seen until some other change, and
-    neither is a change made in the same file-system timestamp tick
-    (a few ms on ext4) as an earlier change the read already saw.
+    Callers share the returned frame, so two calls give the same
+    attribute ids; join two reads of one table the way a self-join of
+    one frame is joined (aliases, or columns derived per side).
+
+    Blind spots: a file of a directory tree rewritten in place under an
+    existing name (no directory entry changes) is not seen until some
+    other change, and neither is a change made in the same file-system
+    timestamp tick (a few ms on ext4) as an earlier change the read
+    already saw, unless it changes a single file's size.
     """
-    path = os.path.abspath(table_dir(base_dir, table))
+    path = os.path.abspath(path)
     # Stamp before reading: a rewrite that races the read leaves an
     # entry whose stamp no longer matches, so it is never served.
     stamp = _tree_stamp(path)
     hit = _RELATIONS.get(path)
     if hit is not None and hit[0] == stamp and hit[1] is spark:
         return hit[2]
-    df = spark.read.option("basePath", path).parquet(path)
-    if "batch_epoch" in df.columns:  # epoch bookkeeping, not user data
-        df = df.drop("batch_epoch")
+    df = read()
     _RELATIONS[path] = (stamp, spark, df)
     return df
+
+
+def read_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
+    """Read a table written by the writers above, through
+    [[cached_relation]]: a later read of the unchanged table returns the
+    same frame."""
+    path = os.path.abspath(table_dir(base_dir, table))
+
+    def read() -> DataFrame:
+        df = spark.read.option("basePath", path).parquet(path)
+        if "batch_epoch" in df.columns:  # epoch bookkeeping, not user data
+            df = df.drop("batch_epoch")
+        return df
+
+    return cached_relation(spark, path, read)
 
 
 def _rm_tree(path: str) -> None:

@@ -29,7 +29,8 @@ path: one harness (``_replay``) spools each feed once as local
 parquet, sizes state partitions from the spooled bytes (one per
 ~64 MB), and keeps small results on the driver (memory sink) and
 large ones executor-side (parquet or ``foreachBatch`` sinks); every
-tempdir, sink view and conf pin is released before a replay returns.
+tempdir, sink view, conf pin and feed checkpoint block is released
+before a replay returns.
 """
 
 from __future__ import annotations
@@ -542,6 +543,16 @@ def _replay(
       ``None`` keeps the session's count. A checkpoint restart reuses
       the count in its offset log. The pin is session-global, so it
       refuses to run while another stream is active.
+    - No trailing no-data batch where nothing waits on the final
+      watermark: an ``availableNow`` replay without ``keep`` runs its
+      LAST wave with ``noDataMicroBatches.enabled=false``. Its rows are
+      emitted by the data batches themselves (an inner join's matches,
+      dedup's first arrivals, stateless maps), so the batch that would
+      only advance the watermark and evict state from a checkpoint the
+      teardown deletes is skipped (~0.7 s of a ~2.5 s spread replay).
+      A ``keep`` replay's rows wait on that watermark, earlier waves
+      hand it to the next restart, and ``processAllAvailable`` drains
+      wait for it, so those keep the batch.
     - All drains share one ``timeout_s`` and raise ``TimeoutError``
       past it. ``available_now=False`` serves Python data sources,
       which have no ``availableNow`` (Spark falls back to one batch,
@@ -549,30 +560,33 @@ def _replay(
       trigger drained by ``processAllAvailable``, which also waits for
       the trailing no-data batch that commits the final watermark.
     - Teardown runs on success, timeout and failure alike: the query
-      stops, the memory sink's view is dropped and the tempdir (spool,
-      checkpoint, sink) is deleted. A memory-sink result stays
-      readable without its view (its plan holds the sink's rows); the
-      other sinks' results are localCheckpoint-materialized first.
+      stops, the memory sink's view is dropped, the feed's checkpoint
+      blocks are released (nothing reads the feed once the spool is
+      written) and the tempdir (spool, checkpoint, sink) is deleted. A
+      memory-sink result stays readable without its view (its plan
+      holds the sink's rows); the other sinks' results are
+      localCheckpoint-materialized first and stay persistent while the
+      caller holds them.
     """
-    lo = hi = None
+    lo = hi = root = query = saved = None
     if feed is not None:
         feed = feed.localCheckpoint(eager=True)
-        lo, hi = feed.agg(F.min(bounds_col), F.max(bounds_col)).collect()[0]
-        if hi is None:
-            return spark.createDataFrame([], out_schema)
-    active = spark.streams.active
-    if active:
-        raise RuntimeError(
-            f"{what} replay started while other streaming queries are active "
-            f"({[q.name for q in active]}); its session-global conf pin would "
-            "leak into them — run replays sequentially"
-        )
     name = f"{what}_replay_{uuid.uuid4().hex[:8]}"
-    root = tempfile.mkdtemp(prefix=f"{name}_")
-    spool, out = os.path.join(root, "spool"), os.path.join(root, "out")
-    table = sinks.table_dir(out, "rows")
-    query = saved = None
     try:
+        if feed is not None:
+            lo, hi = feed.agg(F.min(bounds_col), F.max(bounds_col)).collect()[0]
+            if hi is None:
+                return spark.createDataFrame([], out_schema)
+        active = spark.streams.active
+        if active:
+            raise RuntimeError(
+                f"{what} replay started while other streaming queries are active "
+                f"({[q.name for q in active]}); its session-global conf pin would "
+                "leak into them — run replays sequentially"
+            )
+        root = tempfile.mkdtemp(prefix=f"{name}_")
+        spool, out = os.path.join(root, "spool"), os.path.join(root, "out")
+        table = sinks.table_dir(out, "rows")
         os.makedirs(spool)
         held: list[list[str]] = []
         n, base = 0, time.time() - 3600
@@ -597,9 +611,13 @@ def _replay(
             pins["spark.sql.shuffle.partitions"] = str(parts)
         saved = _set_conf(spark, pins)
         deadline = time.monotonic() + timeout_s
-        for files in held:
+        for k, files in enumerate(held):
             for f in files:
                 os.rename(f, os.path.join(spool, os.path.basename(f)))
+            if k == len(held) - 1 and keep is None and available_now:
+                saved |= _set_conf(
+                    spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+                )
             writer = (
                 stream_fn(spool)
                 .writeStream.outputMode("append")
@@ -645,7 +663,10 @@ def _replay(
         spark.catalog.dropTempView(name)
         if saved is not None:
             _set_conf(spark, saved)
-        shutil.rmtree(root, ignore_errors=True)
+        if feed is not None:
+            feed._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        if root is not None:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def vwap_stream_replay(
@@ -709,7 +730,8 @@ def spread_stream_replay(
     """STREAM-STREAM inner join ([[cross_exchange_stream_join]]) over the
     feed: emitted matched pairs must hash-match the batch theta join.
     No sentinel: an append-mode INNER join emits a match as soon as both
-    rows arrive; the watermark only bounds buffered state."""
+    rows arrive; the watermark only bounds buffered state, so the drain
+    skips the trailing no-data batch that would only evict it."""
     return _replay(
         spark, "spread", price.select(*PRICE_COLS), _feed_wave,
         lambda spool: cross_exchange_stream_join(

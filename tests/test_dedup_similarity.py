@@ -2086,14 +2086,20 @@ def test_connected_components_star_log_rounds_on_long_chain(spark):
     120, so min-label propagation would move the label one hop per
     round (120 rounds) while the star alternation converges within 12
     checkpoint-truncated rounds — and still labels every node with the
-    chain minimum."""
+    chain minimum. The 120 edges sit far under the single-task gate, so
+    the gate is forced to 0 to run the alternation itself."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7, 127)], "doc_id_a long, doc_id_b long"
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components_star(pairs, max_iter=12).collect()
-    }
+    saved = dedup.CC_SINGLE_TASK_MAX_EDGES
+    dedup.CC_SINGLE_TASK_MAX_EDGES = 0
+    try:
+        got = {
+            r.doc_id: r.cluster_id
+            for r in dedup.connected_components_star(pairs, max_iter=12).collect()
+        }
+    finally:
+        dedup.CC_SINGLE_TASK_MAX_EDGES = saved
     assert got == {i: 7 for i in range(7, 128)}
 
 
@@ -3224,3 +3230,23 @@ def test_passthrough_cols_parses_ddl(spark):
     assert _passthrough_cols("w int, d decimal(10,2)") == ["w", "d"]
     assert _passthrough_cols("m map<int,int>, w int") == ["m", "w"]
     assert _passthrough_cols("") == []
+
+
+def test_rep_id_tag_rejects_ids_outside_encodable_range(spark):
+    """The report's ``rep_id * 4 + modality`` encoding is exact only for
+    rep ids in [0, 2^61): the edges of the range encode (2^61 - 1 lands
+    on the largest long), and an id past either edge raises a typed
+    error instead of a mislabeled cluster."""
+    from pyspark.errors import SparkRuntimeException
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators.multimodal import (
+        _tag_rep_id,
+    )
+
+    ok = spark.createDataFrame([(0,), ((1 << 61) - 1,)], "rep_id_a long")
+    got = [r[0] for r in ok.select(_tag_rep_id("rep_id_a", 3)).collect()]
+    assert got == [3, (1 << 63) - 1]
+    for bad in (-1, 1 << 61):
+        df = spark.createDataFrame([(5,), (bad,)], "rep_id_a long")
+        with pytest.raises(SparkRuntimeException, match=r"outside \[0, 2\^61\)"):
+            df.select(_tag_rep_id("rep_id_a", 1)).collect()

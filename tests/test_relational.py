@@ -944,6 +944,23 @@ def test_price_chart_stored_pushes_endswith_into_scan(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_price_base_builds_no_window(spark):
+    """The five-column tick base that 40 builders start from is a plain
+    projection of events: its analyzed plan holds no Window node (a
+    price_data window the optimizer would prune still costs its
+    analysis on every build)."""
+    from conftest import SF_SMOKE
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.oracles.serving import (
+        _price_base,
+    )
+
+    df = _price_base(spark, SF_SMOKE)
+    assert df.columns == ["coin_id", "exchange", "timestamp", "price", "volume"]
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "Window" not in plan, plan
+
+
 def test_chart_ranges_match_oracle_over_stored_tables(spark, tmp_path):
     """price_chart and ohlc_chart over sink-written tables, for every
     time range and for a symbol with no rows, equal the registry's

@@ -340,6 +340,42 @@ def test_fixture_timestamp_dtypes(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
+def test_load_table_reuses_relation_until_the_file_changes(spark, tmp_path):
+    """load_table keeps a single-file table's normalized relation: a
+    repeat call returns the same frame and launches no Spark job, and
+    replacing the file makes the next call read it afresh."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import table_path
+
+    sc = spark.sparkContext
+    src = table_path(SF_SMOKE, "events")
+    dst = table_path(str(tmp_path), "events")
+    shutil.copy(src, dst)
+
+    def load(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(spark, str(tmp_path), "events")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, _ = load("load_table_cache-first")
+    again, jobs = load("load_table_cache-hit")
+    assert again is first
+    assert jobs == 0
+    rows = pq.read_table(src)
+    pq.write_table(rows.slice(0, 7), dst)
+    fresh, _ = load("load_table_cache-replaced")
+    assert fresh is not first
+    assert fresh.count() == 7
+    assert dict(fresh.dtypes)["ts"] == "timestamp"
+
+
 def test_plan_contracts_for_round4_operators(spark):
     """Physical-plan property pins for the round-4 operators — the
     optimizer behaviors the scale design depends on, asserted so a

@@ -1335,15 +1335,43 @@ def _session_state(spark) -> dict:
         "tmp": sorted(os.listdir(tempfile.gettempdir())),
         "conf": [
             spark.conf.get(k, None)
-            for k in ("spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain")
+            for k in (
+                "spark.sql.shuffle.partitions",
+                "spark.sql.streaming.minBatchesToRetain",
+                "spark.sql.streaming.noDataMicroBatches.enabled",
+            )
         ],
+        "rdds": frozenset(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
     }
+
+
+def _assert_left_as_found(before: dict, after: dict, rdds: bool = True) -> None:
+    """``after`` equals ``before``, except that persistent RDDs are only
+    checked for additions (with ``rdds``): the context cleaner may drop
+    an earlier test's blocks at any time."""
+    before, after = dict(before), dict(after)
+    added = after.pop("rdds") - before.pop("rdds")
+    assert after == before
+    if rdds:
+        assert not added, f"persistent RDDs left behind: {sorted(added)}"
+
+
+#: the replays whose result is the memory sink's rows; the others return
+#: a localCheckpoint-materialized frame, persistent while it is held
+_MEMORY_SINK_REPLAYS = {
+    "vwap_stream_replay", "session_stream_replay", "ohlc_stream_replay",
+    "spread_stream_replay", "dedup_stream_replay", "enrich_stream_replay",
+    "spread_outer_stream_replay",
+}
 
 
 @pytest.mark.parametrize("name", sorted(_SPOOL_REPLAYS))
 def test_replay_leaves_no_session_state(spark, tmp_path, monkeypatch, name):
     """A replay call leaves no temp view, active stream, tempdir or conf
-    pin behind, and its result stays readable after teardown."""
+    pin behind, and its result stays readable after teardown. A
+    memory-sink replay also leaves no persistent RDD: the feed's
+    checkpoint blocks are released (the other sinks' results are
+    checkpointed frames the caller holds)."""
     import tempfile
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -1351,9 +1379,59 @@ def test_replay_leaves_no_session_state(spark, tmp_path, monkeypatch, name):
     args = _replay_inputs(spark, kind, empty=False)
     before = _session_state(spark)
     got = getattr(streaming.pipeline, name)(spark, *args)
-    assert _session_state(spark) == before
+    _assert_left_as_found(before, _session_state(spark), name in _MEMORY_SINK_REPLAYS)
     assert got.count() > 0
     got.write.mode("overwrite").format("noop").save()
+
+
+#: micro-batches per replay on the ``_replay_inputs`` feed, in order:
+#: False = a data batch, True = a no-data batch (0 input rows)
+_BATCH_SHAPES = {
+    "spread_stream_replay": [False],
+    "enrich_stream_replay": [False],
+    "dedup_stream_replay": [False],
+    "ohlc_stream_replay": [False, True],
+    "vwap_stream_replay": [False, True],
+    "session_stream_replay": [False, True],
+    "spread_outer_stream_replay": [False, True],
+    "recovery_stream_replay": [False, True, False, True],
+    "late_drop_stream_replay": [False, True, False, True],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH_SHAPES))
+def test_replay_runs_no_data_batch_only_where_rows_wait(spark, name):
+    """A replay whose rows wait on the final watermark (a ``keep``
+    sentinel predicate) keeps the trailing no-data batch that commits
+    it, one per wave, since a restart resumes from that watermark; a
+    replay that emits every row from its data batches (inner join,
+    dedup, stateless map) runs no no-data batch. Counted from the
+    progress events the query posts, one per executed micro-batch."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    shape = []
+
+    class Batches(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            shape.append(event.progress.numInputRows == 0)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    kind, _ = _SPOOL_REPLAYS[name]
+    args = _replay_inputs(spark, kind, empty=False)
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        got = getattr(streaming.pipeline, name)(spark, *args)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert shape == _BATCH_SHAPES[name]
+    assert got.count() > 0
 
 
 @pytest.mark.parametrize("name", sorted(_SPOOL_REPLAYS))
@@ -1379,7 +1457,8 @@ def test_replay_empty_input_returns_declared_schema(spark, monkeypatch, name):
 @pytest.mark.parametrize("sink", ["memory", "parquet", "foreachBatch"])
 def test_replay_teardown_after_stream_failure(spark, tmp_path, monkeypatch, sink):
     """A stream that fails at run time raises out of the harness, and
-    the spool, checkpoint, sink, view, query and conf pin are all gone."""
+    the spool, checkpoint, sink, view, query, conf pins and the feed's
+    checkpoint blocks are all gone."""
     import tempfile
 
     from etl_visualization_of_cryptocurrency_trading_data_spark.streaming import pipeline
@@ -1402,7 +1481,7 @@ def test_replay_teardown_after_stream_failure(spark, tmp_path, monkeypatch, sink
         pipeline._replay(
             spark, "failing", price, pipeline._feed_wave, stream_fn, "x string", sink
         )
-    assert _session_state(spark) == before
+    _assert_left_as_found(before, _session_state(spark))
 
 
 def test_restfeed_replay_honours_timeout(spark, tmp_path, monkeypatch):
@@ -1419,4 +1498,4 @@ def test_restfeed_replay_honours_timeout(spark, tmp_path, monkeypatch):
     before = _session_state(spark)
     with pytest.raises(TimeoutError, match="restfeed replay did not finish in 0s"):
         restfeed_stream_replay(spark, timeout_s=0)
-    assert _session_state(spark) == before
+    _assert_left_as_found(before, _session_state(spark))
