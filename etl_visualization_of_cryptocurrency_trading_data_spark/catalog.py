@@ -53,6 +53,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Done per-load, not only in session.py, because the driver harness
     supplies its own SparkSession. A caller that had set a different
     session TZ gets a ``UserWarning`` instead of a silent override.
+    These are the package's only conf sets outside
+    [[session.scoped_conf]], and no scope can hold them: the returned
+    frame is lazy, and the parquet reader reads ``nanosAsLong`` when the
+    caller later plans an action on it, after this call has returned.
 
     Timestamp normalization: the driver's fixture encoding for
     ``events.ts`` has changed across rounds — parquet TIMESTAMP(NANOS)
@@ -84,6 +88,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    # session-lifetime pins, not call-scoped: the reader reads them when
+    # the caller plans an action on the lazy frame (see docstring)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     tz = spark.conf.get("spark.sql.session.timeZone", None)
     # JVM default in a UTC container is "Etc/UTC" — same zone, don't warn

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
+
 
 def plan_features(df: DataFrame) -> dict[str, int]:
     """Count plan-shape features from the physical plan's string form
@@ -69,8 +71,10 @@ def aqe_skew_probe(spark: SparkSession) -> DataFrame:
       reuse the join's hash partitioning and OptimizeSkewedJoin
       (correctly) refuses to break required distribution;
     - shuffle partitions, thresholds, and advisory size are pinned
-      per-probe and restored after, so the row is identical under the
-      tuned and vanilla driver sessions and at every sf.
+      for each run by [[session.scoped_conf]], which restores every key
+      as it found it (an unset key is unset again), so the row is
+      identical under the tuned and vanilla driver sessions and at
+      every sf, and the probe leaves the session's conf unchanged.
 
     Driver boundary (documented, like [[audit_plans]]): the probe
     executes two tiny fixed-size jobs eagerly and returns a 2-row
@@ -89,19 +93,8 @@ def aqe_skew_probe(spark: SparkSession) -> DataFrame:
     }
 
     def run(skew_enabled: bool):
-        old = {}
-        for k in list(confs) + ["spark.sql.adaptive.skewJoin.enabled"]:
-            try:
-                old[k] = spark.conf.get(k)
-            except Exception:
-                old[k] = None
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            spark.conf.set(
-                "spark.sql.adaptive.skewJoin.enabled",
-                str(skew_enabled).lower(),
-            )
+        skew = {"spark.sql.adaptive.skewJoin.enabled": str(skew_enabled).lower()}
+        with scoped_conf(spark, confs | skew):
             big = spark.range(100_000).select(
                 F.when(F.col("id") % 10 != 0, F.lit(0))
                 .otherwise(F.col("id"))
@@ -138,12 +131,6 @@ def aqe_skew_probe(spark: SparkSession) -> DataFrame:
                 final.count("skew=true") > 0,
                 final.count("AQEShuffleRead") > 0,
             )
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
     return spark.createDataFrame(
         [run(True), run(False)],

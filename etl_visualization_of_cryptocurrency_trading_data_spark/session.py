@@ -13,11 +13,18 @@ multi-executor cluster at 100 TB:
   oracle and are deployment-independent.
 - Arrow enabled: every pandas hop (applyInPandas for the EMA family) is
   vectorized batch transfer, never per-row pickling.
+
+Conf that one call needs for its own length (a replay's state
+partitions, a small loop's AQE-off pin, the skew probe's thresholds) is
+set only through [[scoped_conf]], which puts the session back as it
+found it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +67,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str | None]) -> Iterator[None]:
+    """Set each key of ``conf`` (a ``None`` value unsets it) while the
+    body runs, then restore, in a ``finally``, the value each key had on
+    entry as read by ``spark.conf.get(key, None)``: a key that was unset
+    is unset again, not set to its default. An unset fallback key (one
+    whose default is another key's value, such as
+    ``advisoryPartitionSizeInBytes``) reads as its parent's value when
+    the parent is set, and is restored as set to that value.
+
+    Session conf is session-global: a scope must not overlap a query
+    started on the same session by other code. A streaming query
+    already running is not affected, since it runs on a clone of the
+    session made when it started."""
+    saved = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        _apply(spark, conf)
+        yield
+    finally:
+        _apply(spark, saved)
+
+
+def _apply(spark: SparkSession, conf: dict[str, str | None]) -> None:
+    for key, val in conf.items():
+        if val is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, val)

@@ -384,30 +384,3 @@ def scratch_dir(prefix: str) -> str:
     os.makedirs(out, exist_ok=True)
     return out
 
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a catalog table hash-BUCKETED on ``keys`` (optionally
-    sorted within buckets) — the co-located-join lever for repeated
-    large-to-large joins: two tables bucketed on the same keys into the
-    same bucket count join with NO shuffle on either side (and no sort,
-    if sort_cols covers the keys), turning the recurring
-    fact-to-fact join from two corpus-wide exchanges into a zipped
-    per-bucket merge. The write itself pays one clustering shuffle
-    ONCE; every subsequent join amortizes it — the storage-layout
-    counterpart of [[salted_join]]'s runtime fix, for the case where
-    the same join runs every day at 100 TB.
-
-    Bucketing requires a catalog table (bucket metadata lives in the
-    metastore, not the parquet files) — hence ``saveAsTable``, unlike
-    the path-based [[write_table]]. Pinned by the co-located-join plan
-    test: joining two co-bucketed tables shows zero Exchange nodes."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)

@@ -29,8 +29,8 @@ path: one harness (``_replay``) spools each feed once as local
 parquet, sizes state partitions from the spooled bytes (one per
 ~64 MB), and keeps small results on the driver (memory sink) and
 large ones executor-side (parquet or ``foreachBatch`` sinks); every
-tempdir, sink view, conf pin and feed checkpoint block is released
-before a replay returns.
+tempdir, sink view and feed checkpoint block is released, and every
+conf pin restored, before a replay returns.
 """
 
 from __future__ import annotations
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 from .. import sinks
+from ..session import scoped_conf
 
 # Schema of the spooled price ticks (file streams require an explicit
 # schema — there is no inference on a stream).
@@ -478,18 +479,6 @@ def _partitions_for(spark: SparkSession, nbytes: int) -> int:
     return max(1, min(nbytes // (64 << 20) + 1, cap))
 
 
-def _set_conf(spark: SparkSession, conf: dict) -> dict:
-    """Set every key (``None`` unsets it) and return the previous
-    values in the same form, so a second call restores them."""
-    old = {key: spark.conf.get(key, None) for key in conf}
-    for key, val in conf.items():
-        if val is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, val)
-    return old
-
-
 def _replay(
     spark: SparkSession,
     what: str,
@@ -535,14 +524,19 @@ def _replay(
       ``sinks.write_table``'s epoch-partitioned layout (a retried
       epoch replaces its output: effectively-once on top of the
       checkpointed offsets).
-    - Conf is pinned for the drains: ``minBatchesToRetain=2`` (state
-      versions serve mid-stream recovery, and the checkpoint is deleted
-      on return; ~4% on the 36-trigger restfeed replay) and the state
-      partition count [[_partitions_for]] ``state_bytes``: "spool"
-      measures the spooled files, an int is the caller's estimate,
-      ``None`` keeps the session's count. A checkpoint restart reuses
-      the count in its offset log. The pin is session-global, so it
-      refuses to run while another stream is active.
+    - Conf is pinned by one [[session.scoped_conf]] over the drains and
+      the read-back: ``minBatchesToRetain=2`` (state versions serve
+      mid-stream recovery, and the checkpoint is deleted on return; ~4%
+      on the 36-trigger restfeed replay) and the state partition count
+      [[_partitions_for]] ``state_bytes``: "spool" measures the spooled
+      files, an int is the caller's estimate, ``None`` keeps the
+      session's count. A checkpoint restart reuses the count in its
+      offset log. A nested scope per wave covers its start and drain.
+      Each scope restores every key as it found it (an unset key is
+      unset again) on return, timeout and failure; a query still
+      running then is unaffected, since it runs on a clone of the
+      session made when it started. The pin is session-global, so the
+      replay refuses to run while another stream is active.
     - No trailing no-data batch where nothing waits on the final
       watermark: an ``availableNow`` replay without ``keep`` runs its
       LAST wave with ``noDataMicroBatches.enabled=false``. Its rows are
@@ -568,7 +562,7 @@ def _replay(
       localCheckpoint-materialized first and stay persistent while the
       caller holds them.
     """
-    lo = hi = root = query = saved = None
+    lo = hi = root = query = None
     if feed is not None:
         feed = feed.localCheckpoint(eager=True)
     name = f"{what}_replay_{uuid.uuid4().hex[:8]}"
@@ -609,60 +603,57 @@ def _replay(
         if state_bytes is not None:
             parts = _partitions_for(spark, state_bytes)
             pins["spark.sql.shuffle.partitions"] = str(parts)
-        saved = _set_conf(spark, pins)
-        deadline = time.monotonic() + timeout_s
-        for k, files in enumerate(held):
-            for f in files:
-                os.rename(f, os.path.join(spool, os.path.basename(f)))
-            if k == len(held) - 1 and keep is None and available_now:
-                saved |= _set_conf(
-                    spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+        with scoped_conf(spark, pins):
+            deadline = time.monotonic() + timeout_s
+            for k, files in enumerate(held):
+                for f in files:
+                    os.rename(f, os.path.join(spool, os.path.basename(f)))
+                writer = (
+                    stream_fn(spool)
+                    .writeStream.outputMode("append")
+                    .queryName(name)
+                    .option("checkpointLocation", os.path.join(root, "ckpt"))
                 )
-            writer = (
-                stream_fn(spool)
-                .writeStream.outputMode("append")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-            )
-            if sink == "memory":
-                writer = writer.format("memory")
-            elif sink == "parquet":
-                writer = writer.format("parquet").option("path", table)
-            else:
-                writer = writer.foreachBatch(
-                    lambda batch, epoch_id: sinks.write_table(
-                        sink(batch, epoch_id, out), out, "rows", epoch_id=epoch_id
+                if sink == "memory":
+                    writer = writer.format("memory")
+                elif sink == "parquet":
+                    writer = writer.format("parquet").option("path", table)
+                else:
+                    writer = writer.foreachBatch(
+                        lambda batch, epoch_id: sinks.write_table(
+                            sink(batch, epoch_id, out), out, "rows", epoch_id=epoch_id
+                        )
                     )
-                )
-            if available_now:
-                query = writer.trigger(availableNow=True).start()
-                done = query.awaitTermination(max(deadline - time.monotonic(), 0.001))
+                last = k == len(held) - 1 and keep is None and available_now
+                no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+                with scoped_conf(spark, no_data if last else {}):
+                    if available_now:
+                        query = writer.trigger(availableNow=True).start()
+                        done = query.awaitTermination(max(deadline - time.monotonic(), 0.001))
+                    else:
+                        query = writer.trigger(processingTime="50 milliseconds").start()
+                        timer = threading.Timer(max(deadline - time.monotonic(), 0), query.stop)
+                        timer.start()
+                        try:
+                            query.processAllAvailable()
+                        finally:
+                            timer.cancel()
+                        done = query.isActive  # the timer stops it when time runs out
+                if not done:
+                    raise TimeoutError(f"{what} replay did not finish in {timeout_s}s")
+            if sink == "memory":
+                result = spark.table(name)
             else:
-                query = writer.trigger(processingTime="50 milliseconds").start()
-                timer = threading.Timer(max(deadline - time.monotonic(), 0), query.stop)
-                timer.start()
-                try:
-                    query.processAllAvailable()
-                finally:
-                    timer.cancel()
-                done = query.isActive  # the timer stops it when time runs out
-            if not done:
-                raise TimeoutError(f"{what} replay did not finish in {timeout_s}s")
-        if sink == "memory":
-            result = spark.table(name)
-        else:
-            result = spark.read.schema(out_schema).parquet(table).select(
-                *DataType.fromDDL(out_schema).names
-            )
-        if keep is not None:
-            result = result.filter(keep)
-        return result if sink == "memory" else result.localCheckpoint(eager=True)
+                result = spark.read.schema(out_schema).parquet(table).select(
+                    *DataType.fromDDL(out_schema).names
+                )
+            if keep is not None:
+                result = result.filter(keep)
+            return result if sink == "memory" else result.localCheckpoint(eager=True)
     finally:
         if query is not None:
             query.stop()
         spark.catalog.dropTempView(name)
-        if saved is not None:
-            _set_conf(spark, saved)
         if feed is not None:
             feed._jdf.queryExecution().analyzed().rdd().unpersist(False)
         if root is not None:

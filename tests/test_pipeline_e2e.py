@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from etl_visualization_of_cryptocurrency_trading_data_spark import sinks, streaming
 from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import load_table
 from etl_visualization_of_cryptocurrency_trading_data_spark.plans import serving
+from etl_visualization_of_cryptocurrency_trading_data_spark.session import scoped_conf
 from etl_visualization_of_cryptocurrency_trading_data_spark.sources import envelope as env
 
 from conftest import SF_SMOKE
@@ -175,10 +176,7 @@ def test_restfeed_pushdown_prunes_pages(spark):
     from etl_visualization_of_cryptocurrency_trading_data_spark.sources import restfeed
 
     restfeed.register(spark)
-    key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         opts = dict(pages="4", coins_per_page="5", minutes="30")
         base = spark.read.format("cryptofeed").options(**opts).load()
         pushed = (
@@ -192,11 +190,6 @@ def test_restfeed_pushdown_prunes_pages(spark):
         )
         # R7 belongs to coinbase; a binance_R7 id cannot exist
         assert pushed.filter(F.col("coin_id") == "binance_R7").count() == 0
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def test_restfeed_stream_equals_batch(spark):

@@ -12,6 +12,7 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import (
     register_views,
 )
 from etl_visualization_of_cryptocurrency_trading_data_spark.operators import derive
+from etl_visualization_of_cryptocurrency_trading_data_spark.session import scoped_conf
 
 from conftest import SF_SMOKE
 
@@ -192,27 +193,25 @@ def test_bucketed_join_plan_has_no_exchange(spark, tmp_path):
 
     price = derive.price_data(load_table(spark, SF_SMOKE, "events"))
     ohlc = derive.ohlc_data(price)
-    old_wh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        write_bucketed_table(
-            price.select("coin_id", "exchange", "timestamp", "price"),
-            "b_price", ["coin_id", "exchange"], 8, ["coin_id", "exchange"],
-        )
-        write_bucketed_table(
-            ohlc, "b_ohlc", ["coin_id", "exchange"], 8, ["coin_id", "exchange"]
-        )
-        joined = spark.table("b_price").join(
-            spark.table("b_ohlc").withColumnRenamed("timestamp", "hour_ts"),
-            ["coin_id", "exchange"],
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        # sanity: the join actually produces rows
-        assert joined.count() > 0
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            write_bucketed_table(
+                price.select("coin_id", "exchange", "timestamp", "price"),
+                "b_price", ["coin_id", "exchange"], 8, ["coin_id", "exchange"],
+            )
+            write_bucketed_table(
+                ohlc, "b_ohlc", ["coin_id", "exchange"], 8, ["coin_id", "exchange"]
+            )
+            joined = spark.table("b_price").join(
+                spark.table("b_ohlc").withColumnRenamed("timestamp", "hour_ts"),
+                ["coin_id", "exchange"],
+            )
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
+            # sanity: the join actually produces rows
+            assert joined.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_wh)
         spark.sql("DROP TABLE IF EXISTS b_price")
         spark.sql("DROP TABLE IF EXISTS b_ohlc")
 
@@ -493,7 +492,10 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     plain join of the unbucketed frames."""
     import re
 
-    from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import load_table
+    from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import (
+        load_table,
+        write_bucketed_table,
+    )
 
     db = "bucket_test_db"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -503,21 +505,16 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     )
     totals = price.groupBy("coin_id").agg(F.sum("volume").alias("total_volume"))
     try:
-        sinks.write_bucketed_table(price, f"{db}.ticks", ["coin_id"], buckets=4)
-        sinks.write_bucketed_table(totals, f"{db}.totals", ["coin_id"], buckets=4)
+        write_bucketed_table(price, f"{db}.ticks", ["coin_id"], n_buckets=4)
+        write_bucketed_table(totals, f"{db}.totals", ["coin_id"], n_buckets=4)
         a = spark.table(f"{db}.ticks")
         b = spark.table(f"{db}.totals")
-        with_conf = spark.conf
-        old = with_conf.get("spark.sql.autoBroadcastJoinThreshold")
-        with_conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             joined = a.join(b, "coin_id")
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, plan
             assert "SortMergeJoin" in plan, plan
             got = joined.count()
-        finally:
-            with_conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         want = price.join(totals, "coin_id").count()
         assert got == want and got > 0
     finally:
@@ -566,6 +563,38 @@ def test_no_driver_side_materialization_in_operator_paths():
                 if n:
                     found[(rel, kind)] = n
     assert found == allowed, f"driver-side materialization drift: {found}"
+
+
+def test_conf_is_set_only_by_scoped_conf_and_load_table():
+    """Self-policing sweep for conf pins: the package sets or unsets
+    session conf only in ``session.scoped_conf`` (which restores every
+    key it touched) and in ``catalog.load_table``'s two session-lifetime
+    pins. A new hit means a call grew a hand-written save/restore that
+    can leak a key, or leave an unset key set to its default."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_visualization_of_cryptocurrency_trading_data_spark",
+    )
+    allowed = {
+        # scoped_conf's one set and one unset
+        "session.py": 2,
+        # nanosAsLong and the UTC session zone: the parquet reader reads
+        # them when the caller plans an action on the lazy frame, after
+        # load_table returns, so no call-length scope can hold them
+        "catalog.py": 2,
+    }
+    found: dict[str, int] = {}
+    for root, _, files in os.walk(pkg):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(root, fname)
+                n = len(re.findall(r"conf\.(?:set|unset)\(", open(path).read()))
+                if n:
+                    found[os.path.relpath(path, pkg)] = n
+    assert found == allowed, f"conf pins outside scoped_conf: {found}"
 
 
 def test_plan_audit_pins_flagship_join_strategy(spark):

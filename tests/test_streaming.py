@@ -19,6 +19,7 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.operators import der
 from etl_visualization_of_cryptocurrency_trading_data_spark.operators.indicators import (
     technical_indicators,
 )
+from etl_visualization_of_cryptocurrency_trading_data_spark.session import scoped_conf
 
 from conftest import SF_SMOKE
 
@@ -253,9 +254,7 @@ def test_stateful_indicators_multichunk_group(spark, tmp_path, price_df, expecte
     """Groups larger than one Arrow batch arrive as multiple chunks in
     arbitrary order — the handler must sort ACROSS chunks before the
     sequential recursion (regression for the per-chunk-sort bug)."""
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}):
         spool = make_spool(tmp_path, price_df, 1)
         stream = streaming.read_price_stream(spark, spool)
         q = (
@@ -270,8 +269,6 @@ def test_stateful_indicators_multichunk_group(spark, tmp_path, price_df, expecte
         assert q.awaitTermination(300)
         got = spark.table("chunked_ind").toPandas()
         assert_indicators_equal(got, expected_indicators)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_session_stream_matches_batch_sessionize(spark, tmp_path, price_df):
@@ -785,19 +782,9 @@ def test_vwap_stream_under_rocksdb_state_store(spark):
         rows,
         "coin_id string, exchange string, timestamp timestamp, price double, volume double",
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         got = vwap_stream_replay(spark, price).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
     # 3 hourly windows for c1 + 1 for c2, volume-weighted means
     by_key = {(r.coin_id, r.timestamp): r for r in got}
     assert len(by_key) == 4
