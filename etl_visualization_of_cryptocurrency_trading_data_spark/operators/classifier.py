@@ -125,7 +125,6 @@ def train_quality_classifier(
     lr: float = QCLF_LR,
     salt: str = QCLF_SALT,
     round_decimals: int = 9,
-    persist_intermediate: bool = True,
     features: DataFrame | None = None,
     labels: DataFrame | None = None,
 ) -> DataFrame:
@@ -167,17 +166,12 @@ def train_quality_classifier(
         raise ValueError("iters must be >= 1")
     own_lab = labels is None
     own_feats = features is None
-    lab = _labeled(documents) if own_lab else labels
+    lab = _labeled(documents).persist() if own_lab else labels
     feats = (
-        hashed_features(documents, buckets=buckets, salt=salt)
+        hashed_features(documents, buckets=buckets, salt=salt).persist()
         if own_feats
         else features
     )
-    if persist_intermediate:
-        if own_lab:
-            lab = lab.persist()
-        if own_feats:
-            feats = feats.persist()
     # balanced class weights from ONE broadcast single-row total (A6
     # idiom); exact integer divisions, bit-identical across engines
     tot = lab.agg(
@@ -221,11 +215,10 @@ def train_quality_classifier(
     # (code-review r12). Injected frames are the caller's cache, not
     # ours to drop (the whole point of injecting is reuse after
     # training).
-    if persist_intermediate:
-        if own_lab:
-            lab.unpersist()
-        if own_feats:
-            feats.unpersist()
+    if own_lab:
+        lab.unpersist()
+    if own_feats:
+        feats.unpersist()
     return w.select(F.col("b").alias("bucket"), F.col("w").alias("weight"))
 
 

@@ -286,7 +286,6 @@ def redact_pii(documents: DataFrame) -> DataFrame:
 def curation_pipeline(
     documents: DataFrame,
     contamination_threshold: float = 0.5,
-    persist_intermediate: bool = False,
 ) -> DataFrame:
     """The composed training-corpus curation pipeline, end to end:
 
@@ -305,15 +304,12 @@ def curation_pipeline(
 
     Scale: stages 1-3 are one scan + one fingerprint-keyed shuffle.
     Stage 4 consumes the deduped stream twice more (the posting
-    self-join inside the contamination check), so the LAZY composition
-    evaluates the stage-1-3 prefix three times. At sf scale that is
-    fine (and it keeps the registered query a pure DataFrame the
-    oracle can replay); at 100 TB materialize the stage-3 output
-    between stages — write it to parquet via ``sinks`` and feed the
-    re-read to stage 4, the standard checkpoint boundary for
-    multi-pass pipeline stages. ``persist_intermediate=True`` is the
-    in-session equivalent (caches the deduped corpus across the three
-    consumers); it changes no results.
+    self-join inside the contamination check), so the deduped corpus
+    is cached and the stage-1-3 prefix runs once for its three
+    consumers; the cache changes no results. At 100 TB materialize the
+    stage-3 output instead — write it to parquet via ``sinks`` and
+    feed the re-read to stage 4, the standard checkpoint boundary for
+    multi-pass pipeline stages.
     """
     from .dedup import cross_split_contamination
     from .sampling import train_val_test_split
@@ -325,9 +321,8 @@ def curation_pipeline(
         quality.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(*documents.columns)
+        .persist()
     )
-    if persist_intermediate:
-        deduped = deduped.persist()
     split = train_val_test_split(deduped, "doc_id")
     contaminated = cross_split_contamination(deduped).filter(
         F.col("contamination_ratio") >= contamination_threshold
@@ -511,7 +506,6 @@ def curation_pipeline_v3(
     rounds: int = 3,
     budget: int = 512,
     contamination_threshold: float = 0.5,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """The END-TO-END pretraining data pipeline (r10 verdict item #3)
     — the composition a training run actually ships, chaining the
@@ -552,12 +546,12 @@ def curation_pipeline_v3(
     buckets, never all-pairs) over the gated corpus; stage 3 is a pure
     map; stage 4 one posting self-join bounded by max_df; stage 5 one
     tokenize scan + TakeOrdered; stage 6 is vocabulary-bound training
-    + broadcast encode over k docs. ``persist_intermediate`` (default
-    True — unlike [[curation_pipeline]] this chain has FIVE consumers
-    of the survivor frame) caches the gated and deduped corpora across
-    consumers; it changes no results. At 100 TB replace the persists
-    with parquet materialization between stages 2/4/5 — the standard
-    checkpoint boundary (see [[curation_pipeline]]).
+    + broadcast encode over k docs. The gated, deduped and
+    decontaminated corpora are materialized at their stage boundaries
+    (this chain has FIVE consumers of the survivor frame; see
+    [[_curation_stages]]); that changes no results. At 100 TB replace
+    them with parquet materialization between stages 2/4/5 — the
+    standard checkpoint boundary (see [[curation_pipeline]]).
     """
     from .text import with_quality
 
@@ -569,7 +563,6 @@ def curation_pipeline_v3(
         rounds=rounds,
         budget=budget,
         contamination_threshold=contamination_threshold,
-        persist_intermediate=persist_intermediate,
     )
 
 
@@ -579,7 +572,6 @@ def _curation_stages(
     rounds: int = 3,
     budget: int = 512,
     contamination_threshold: float = 0.5,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Stages 2-6 of the end-to-end pipeline (near-dup dedup -> split
     -> decontaminate -> DSIR resample -> token-true pack), shared
@@ -594,13 +586,14 @@ def _curation_stages(
     )
     from .sampling import dsir_sample, train_val_test_split
 
-    # Stage boundaries are EAGER localCheckpoints, not persists
-    # (OPTIMIZATION_r15, guide §3.3/§5 — the r14 PCA lesson applied to
-    # this chain): a persist caches the DATA but leaves the LOGICAL
-    # plan intact, so each of the many downstream consumers (the
-    # banded minhash join family, the CC edge build, the survivor
-    # join, the posting self-join, the DSIR scan, three BPE
-    # consumers) re-analyzed the entire accumulated prefix — measured
+    # The three stage boundaries (gated corpus, survivors, clean train
+    # set) are EAGER localCheckpoints, not persists (OPTIMIZATION_r15,
+    # guide §3.3/§5 — the r14 PCA lesson applied to this chain): a
+    # persist caches the DATA but leaves the LOGICAL plan intact, so
+    # each of the many downstream consumers (the banded minhash join
+    # family, the CC edge build, the survivor join, the posting
+    # self-join, the DSIR scan, three BPE consumers) re-analyzed the
+    # entire accumulated prefix — measured
     # ABAB at sf0.1: v3 median 11.6 s (persist) vs 9.9 s (checkpoint),
     # with the checkpoint arm visibly tighter because the repeated
     # analyzer work, not the data, was the variance. The materialized
@@ -609,16 +602,9 @@ def _curation_stages(
     # trade (executor loss here means recompute-from-scratch; at
     # 100 TB the docstring's parquet materialization between stages is
     # the durable form of the same boundary). Values unchanged.
-    def _stage(df: DataFrame) -> DataFrame:
-        if not persist_intermediate:
-            return df
-        return df.localCheckpoint(eager=True)
-
     cols = ["doc_id", "text", "lang", "source"]
-    quality = _stage(quality)
-    pairs = minhash_lsh_pairs(
-        quality, hash_family="md5", persist_intermediate=persist_intermediate
-    )
+    quality = quality.localCheckpoint(eager=True)
+    pairs = minhash_lsh_pairs(quality, hash_family="md5")
     comp = connected_components_star(pairs)
     # clusters hold only docs with a dup edge, but that set grows O(N)
     # with the corpus (web near-dup rates run 20-30%), so the join
@@ -628,21 +614,23 @@ def _curation_stages(
     # the broadcast size ceiling exactly at the scale this pipeline
     # targets). Only picked below (<= k rows by construction) is
     # force-broadcast.
-    survivors = _stage(
+    survivors = (
         quality.join(comp, "doc_id", "left")
         .filter(
             F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col("doc_id"))
         )
         .select(*cols)
+        .localCheckpoint(eager=True)
     )
     split = train_val_test_split(survivors, "doc_id")
     contaminated = cross_split_contamination(survivors).filter(
         F.col("contamination_ratio") >= contamination_threshold
     )
-    train_clean = _stage(
+    train_clean = (
         split.filter(F.col("split") == "train")
         .join(contaminated.select("doc_id"), "doc_id", "left_anti")
         .select(*cols)
+        .localCheckpoint(eager=True)
     )
     picked = dsir_sample(train_clean, k=k)
     selected = train_clean.join(F.broadcast(picked.select("doc_id")), "doc_id")
@@ -662,9 +650,7 @@ def _curation_stages(
     return pack_chunks_bpe(selected, rounds=rounds, budget=budget)
 
 
-def _trained_keep_set(
-    documents: DataFrame, persist_intermediate: bool = True
-) -> DataFrame:
+def _trained_keep_set(documents: DataFrame) -> DataFrame:
     """The trained-classifier gate shared by v4/v5/v6: train the
     hashed-BoW filter on the full corpus against the heuristic teacher,
     score the same corpus, return the keep set (doc_id of every
@@ -686,14 +672,8 @@ def _trained_keep_set(
         train_quality_classifier,
     )
 
-    feats = hashed_features(documents)
-    if persist_intermediate:
-        feats = feats.persist()
-    wts = train_quality_classifier(
-        documents,
-        persist_intermediate=persist_intermediate,
-        features=feats,
-    )
+    feats = hashed_features(documents).persist()
+    wts = train_quality_classifier(documents, features=feats)
     return (
         score_quality(documents, wts, features=feats)
         .filter(F.col("predicted"))
@@ -707,7 +687,6 @@ def curation_pipeline_v4(
     rounds: int = 3,
     budget: int = 512,
     contamination_threshold: float = 0.5,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """[[curation_pipeline_v3]] with the hand-weighted heuristic gate
     replaced by the TRAINED quality filter (r11 verdict item #6): the
@@ -733,7 +712,7 @@ def curation_pipeline_v4(
     stays the planner's choice — same posture as the dup-component
     map below it (NEVER force-broadcast a corpus-fraction frame)."""
     cols = ["doc_id", "text", "lang", "source"]
-    keep = _trained_keep_set(documents, persist_intermediate)
+    keep = _trained_keep_set(documents)
     quality = documents.join(keep, "doc_id").select(*cols)
     return _curation_stages(
         quality,
@@ -741,7 +720,6 @@ def curation_pipeline_v4(
         rounds=rounds,
         budget=budget,
         contamination_threshold=contamination_threshold,
-        persist_intermediate=persist_intermediate,
     )
 
 
@@ -915,7 +893,6 @@ def image_text_dup_agreement(
         n=n,
         threshold=threshold,
         hash_family="md5",
-        persist_intermediate=True,
     ).select("doc_id_a", "doc_id_b")
     labels = perceptual_dup_clusters(media, max_hamming=max_hamming).persist()
     la = labels.select(
@@ -969,7 +946,6 @@ def curation_pipeline_v5(
     contamination_threshold: float = 0.5,
     payload_mod: int = 3,
     max_hamming: int = 3,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """[[curation_pipeline_v4]] with a MEDIA stage (r13 verdict item
     #5): documents carrying an image payload additionally pass the
@@ -995,7 +971,7 @@ def curation_pipeline_v5(
     from .multimodal import perceptual_dup_drops, ppm_table
 
     cols = ["doc_id", "text", "lang", "source"]
-    keep = _trained_keep_set(documents, persist_intermediate)
+    keep = _trained_keep_set(documents)
     media = ppm_table(
         documents.filter(F.col("doc_id") % payload_mod == 0)
     )
@@ -1011,7 +987,6 @@ def curation_pipeline_v5(
         rounds=rounds,
         budget=budget,
         contamination_threshold=contamination_threshold,
-        persist_intermediate=persist_intermediate,
     )
 
 
@@ -1025,7 +1000,6 @@ def curation_pipeline_v6(
     image_max_hamming: int = 3,
     audio_max_hamming: int = 2,
     video_max_hamming: int = 1,
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """[[curation_pipeline_v5]] with the FULL multimodal gate: every
     document carries exactly ONE payload modality
@@ -1057,7 +1031,7 @@ def curation_pipeline_v6(
     )
 
     cols = ["doc_id", "text", "lang", "source"]
-    keep = _trained_keep_set(documents, persist_intermediate)
+    keep = _trained_keep_set(documents)
     m = F.col("doc_id") % modality_mod
     drops = (
         perceptual_dup_drops(
@@ -1088,5 +1062,4 @@ def curation_pipeline_v6(
         rounds=rounds,
         budget=budget,
         contamination_threshold=contamination_threshold,
-        persist_intermediate=persist_intermediate,
     )

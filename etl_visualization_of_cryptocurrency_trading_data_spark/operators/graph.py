@@ -64,7 +64,6 @@ def pagerank(
     iters: int = 3,
     damping_pct: int = 85,
     scale_decimals: int = 9,
-    persist_edges: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over an undirected edge list after ``iters``
     rounds, computed in INTEGER FIXED-POINT on a 10^-scale_decimals
@@ -91,12 +90,11 @@ def pagerank(
     Scale shape: per round, the contribution shuffle carries one
     long per edge and the rank table one long per node; the
     composition stays a lazy linear chain for small fixed ``iters``
-    exactly like [[kmeans_centroids]]. ``persist_edges`` pins the
-    bidirectional edge list + degree table at the build-once/
-    iterate-many boundary (neutral on a dense graph where the
-    iteration joins dominate — A/B 25.8 vs 25.2 s at sf0.1 hourly —
-    but it bounds re-evaluation of an expensive sparse edge build,
-    so it stays on).
+    exactly like [[kmeans_centroids]]. The bidirectional edge list +
+    degree table are cached at the build-once/iterate-many boundary
+    (neutral on a dense graph where the iteration joins dominate —
+    A/B 25.8 vs 25.2 s at sf0.1 hourly — but it bounds re-evaluation
+    of an expensive sparse edge build).
     """
     scale = 10 ** scale_decimals
     both = edges.select("src", "dst", "weight").unionByName(
@@ -109,13 +107,12 @@ def pagerank(
     # wdeg aggregate), and without the cache the whole distinct/window/
     # self-join edge build runs twice inside one materialization —
     # measured 3.4 s -> 6.9 s at sf0.1 when this persist was dropped.
-    if persist_edges:
-        both = both.persist()
-    wdeg = both.groupBy(F.col("src").alias("id")).agg(
-        F.sum("weight").alias("wdeg")
+    both = both.persist()
+    wdeg = (
+        both.groupBy(F.col("src").alias("id"))
+        .agg(F.sum("weight").alias("wdeg"))
+        .persist()
     )
-    if persist_edges:
-        wdeg = wdeg.persist()
     # wdeg(u) is a per-round constant, so it joins the edge list ONCE
     # here instead of once per iteration — each round then needs a
     # single keyed join (rank) instead of two (3 joins removed at
@@ -125,9 +122,7 @@ def pagerank(
     # way.
     edged = both.join(
         wdeg.select(F.col("id").alias("src"), "wdeg"), "src"
-    ).select("src", "dst", "weight", "wdeg")
-    if persist_edges:
-        edged = edged.persist()
+    ).select("src", "dst", "weight", "wdeg").persist()
     n_nodes = nodes.select(F.count("*").alias("_n"))
     base = nodes.crossJoin(F.broadcast(n_nodes))
     teleport = F.floor(

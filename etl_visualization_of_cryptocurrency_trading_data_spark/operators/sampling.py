@@ -281,7 +281,6 @@ def leakage_safe_split(
         n=n,
         threshold=threshold,
         hash_family=hash_family,
-        persist_intermediate=True,
     )
     comp = connected_components_star(pairs)
     labeled = documents.select("doc_id").join(comp, "doc_id", "left").select(

@@ -407,7 +407,6 @@ def embedding_dup_pairs(
     threshold: float = 0.5,
     n_planes: int = 16,
     bands: int = 4,
-    persist_intermediate: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup modality for
     embedded corpora): banded sign-bit LSH generates candidates — two
@@ -421,12 +420,9 @@ def embedding_dup_pairs(
     deterministic literals, so the DuckDB oracle reproduces the same
     candidate set bit-for-bit (exact parity, not rows-only).
 
-    ``persist_intermediate=True`` caches the banded sign-bit table.
-    Usually leave it OFF: the self-join sides are identical subtrees,
-    ReuseExchange already computes them once, and forcing the cache
-    measured as a net loss (3.2 s -> 4.3 s at sf0.1). The knob exists
-    for fan-out into differently-shaped consumers where reuse cannot
-    apply.
+    The banded sign-bit table is not cached: the self-join sides are
+    identical subtrees, ReuseExchange already computes them once, and
+    forcing the cache measured as a net loss (3.2 s -> 4.3 s at sf0.1).
     """
     planes = hyperplanes(n_planes)
     r = n_planes // bands
@@ -457,8 +453,6 @@ def embedding_dup_pairs(
             )
         ).alias("bb"),
     ).select("vec_id", "bb.band", "bb.val")
-    if persist_intermediate:
-        banded = banded.persist()
     a, b_ = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -488,7 +482,6 @@ def knn_ivf(
     n_probe: int = 2,
     centroid_modulus: int = 101,
     centroids: DataFrame | None = None,
-    persist_assignment: bool = False,
     centroid_limit: int | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: the second scale path next to LSH.
@@ -517,19 +510,20 @@ def knn_ivf(
     assignment quadratic (measured 75x at 10x data, NOTES_r05 §3).
     Registered as ``knn_ivf_fixed``.
 
-    ``persist_assignment=True`` caches the ranked assignment (the
-    inverted-list table): the inverted lists and the probe lists both
-    consume it, and when ``centroids`` carries an expensive training
-    subtree each consumer would re-run the corpus-wide centroid scoring
+    With ``centroids`` passed, the ranked assignment (the inverted-list
+    table) is cached: the inverted lists and the probe lists both
+    consume it, and the training subtree those centroids carry would
+    otherwise re-run the corpus-wide centroid scoring per consumer
     (measured 3.8 s -> 2.5 s warm at sf0.1 for the Lloyd-trained index).
     This is exactly the table a deployed IVF index materializes to
-    storage; leave it off for the cheap sample-centroid default, whose
+    storage. The cheap sample-centroid default is not cached: its
     identical subtrees already hit ReuseExchange.
     """
     if probe_filter is None:
         probe_filter = F.col("vec_id") % 50 == 0
     base = embeddings.select("vec_id", _as_double("embedding").alias("emb"))
-    if centroids is None:
+    trained = centroids is not None
+    if not trained:
         cent_rule = (
             F.col("vec_id") < centroid_limit
             if centroid_limit is not None
@@ -548,7 +542,7 @@ def knn_ivf(
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cent_cos"), F.asc("cent_id"))
     ranked = scored.withColumn("crank", F.row_number().over(w))
-    if persist_assignment:
+    if trained:
         ranked = ranked.persist()
     lists = ranked.filter(F.col("crank") == 1).select("vec_id", "emb", "cent_id")
     probe_lists = (
@@ -1084,7 +1078,6 @@ def knn_pq(
     dim: int = 64,
     round_decimals: int = 9,
     sample_modulus: int = 7,
-    persist_codebooks: bool = True,
 ) -> DataFrame:
     """Top-k nearest neighbors by PQ asymmetric distance computation
     (ADC): the probe stays a float vector, the corpus is its PQ codes,
@@ -1106,10 +1099,10 @@ def knn_pq(
     _pq_sub_dist; no aggregation at all); the scoring join touches
     each corpus CODE row once per probe — |corpus| * m * |probes|
     fixed-width rows, the honest ADC cost, with no float vectors in
-    the pair stream. ``persist_codebooks`` pins the trained codebook
-    (compact (sub, code, cvec) form) at the train-once/search-many
-    boundary — its two differently-shaped consumers, the encode join
-    and the probe tables, would each rerun the Lloyd pass.
+    the pair stream. The trained codebook (compact (sub, code, cvec)
+    form) is pinned at the train-once/search-many boundary — its two
+    differently-shaped consumers, the encode join and the probe tables,
+    would otherwise each rerun the Lloyd pass.
     """
     if probe_filter is None:
         probe_filter = F.col("vec_id") % 50 == 0
@@ -1117,13 +1110,12 @@ def knn_pq(
     cvecs = _pq_codebook_vecs(embeddings, m=m, codes=codes, dim=dim,
                               round_decimals=round_decimals,
                               sample_modulus=sample_modulus)
-    if persist_codebooks:
-        # eager localCheckpoint, not persist (OPTIMIZATION_r14, guide
-        # §3.3): both consumers' plans carried the full Lloyd-training
-        # subtree through analysis/optimization even with the cache;
-        # the checkpoint truncates the m*codes-row lineage to a leaf
-        # (values identical — the frame is already on the rounding grid)
-        cvecs = cvecs.localCheckpoint(eager=True)
+    # eager localCheckpoint, not persist (OPTIMIZATION_r14, guide
+    # §3.3): both consumers' plans carried the full Lloyd-training
+    # subtree through analysis/optimization even with the cache;
+    # the checkpoint truncates the m*codes-row lineage to a leaf
+    # (values identical — the frame is already on the rounding grid)
+    cvecs = cvecs.localCheckpoint(eager=True)
     base = embeddings.select("vec_id", _as_double("embedding").alias("emb"))
     enc = _pq_assign(base, cvecs, m, sub_d, round_decimals).select(
         "vec_id", "sub", "code"
@@ -1220,7 +1212,6 @@ def knn_ivf_pq(
     dim: int = 64,
     round_decimals: int = 9,
     sample_modulus: int = 7,
-    persist_codebooks: bool = True,
 ) -> DataFrame:
     """The full IVF-PQ composition — the production ANN index shape
     (Jégou et al., "Product Quantization for Nearest Neighbor Search"):
@@ -1268,13 +1259,12 @@ def knn_ivf_pq(
         embeddings, m=m, codes=codes, dim=dim,
         round_decimals=round_decimals, sample_modulus=sample_modulus,
     )
-    if persist_codebooks:
-        # eager localCheckpoint, not persist (OPTIMIZATION_r14, guide
-        # §3.3): both consumers' plans carried the full Lloyd-training
-        # subtree through analysis/optimization even with the cache;
-        # the checkpoint truncates the m*codes-row lineage to a leaf
-        # (values identical — the frame is already on the rounding grid)
-        cvecs = cvecs.localCheckpoint(eager=True)
+    # eager localCheckpoint, not persist (OPTIMIZATION_r14, guide
+    # §3.3): both consumers' plans carried the full Lloyd-training
+    # subtree through analysis/optimization even with the cache;
+    # the checkpoint truncates the m*codes-row lineage to a leaf
+    # (values identical — the frame is already on the rounding grid)
+    cvecs = cvecs.localCheckpoint(eager=True)
     enc = _pq_assign(base, cvecs, m, sub_d, round_decimals).select(
         "vec_id", "sub", "code"
     )

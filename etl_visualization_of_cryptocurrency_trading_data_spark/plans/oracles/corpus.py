@@ -36,14 +36,11 @@ def q_curation_pipeline(spark, sf_dir):
     """The composed end-to-end corpus pipeline: quality gate -> exact
     dedup -> deterministic split -> decontamination -> per-(split,
     lang) manifest. One registered query proving the operators compose
-    as DataFrames. persist_intermediate caches the (dimension-sized)
-    deduped corpus across the pipeline's three consumers — the
-    in-session stand-in for the stage-materialization boundary the
-    operator docstring prescribes at 100 TB; results are identical
-    either way (pinned in pytest)."""
-    return corpus.curation_pipeline(
-        _documents(spark, sf_dir), persist_intermediate=True
-    )
+    as DataFrames. The operator caches the (dimension-sized) deduped
+    corpus across the pipeline's three consumers — the in-session
+    stand-in for the stage-materialization boundary the operator
+    docstring prescribes at 100 TB."""
+    return corpus.curation_pipeline(_documents(spark, sf_dir))
 
 def q_dataset_split(spark, sf_dir):
     """Deterministic train/val/test split by content hash: counts per

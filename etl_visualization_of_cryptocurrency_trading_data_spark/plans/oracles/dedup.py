@@ -44,7 +44,6 @@ def q_ngram_jaccard(spark, sf_dir):
         n=3,
         threshold=0.5,
         max_df=NGRAM_MAX_DF,
-        persist_intermediate=True,
     )
 
 def q_minhash_lsh(spark, sf_dir):
@@ -56,7 +55,6 @@ def q_minhash_lsh(spark, sf_dir):
         n=3,
         threshold=0.5,
         hash_family="md5",
-        persist_intermediate=True,
     )
 
 def q_url_dedup(spark, sf_dir):

@@ -128,17 +128,18 @@ def q_knn_ivf_trained(spark, sf_dir):
     plan (train + assign + search), closing the loop the similarity
     docstrings promise.
 
-    The centroid frame is persisted: the search consumes the
-    assignment ranking twice (inverted lists + probe lists), and
-    without the cache each consumer would re-run the full training
-    subtree (observed: 13 parquet scans in the executed plan vs 5
-    with the cache). k x dim rows — the same train-once/search-many
+    The centroid frame is persisted, and knn_ivf caches the assignment
+    ranking it builds from passed centroids: the search consumes that
+    ranking twice (inverted lists + probe lists), and without the
+    cache each consumer would re-run the full training subtree
+    (observed: 13 parquet scans in the executed plan vs 5 with the
+    cache). k x dim rows — the same train-once/search-many
     materialization boundary a real deployment has, where the trained
     index is a persisted table. No job runs at plan construction
     (persist is lazy)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = similarity.kmeans_centroids(emb, iters=2).persist()
-    return similarity.knn_ivf(emb, k=5, centroids=cent, persist_assignment=True)
+    return similarity.knn_ivf(emb, k=5, centroids=cent)
 
 def q_knn_recall(spark, sf_dir):
     """ANN quality contract (similarity.knn_recall): recall@5 of the

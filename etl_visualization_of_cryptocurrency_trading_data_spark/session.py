@@ -73,17 +73,16 @@ def get_spark(
 def scoped_conf(spark: SparkSession, conf: dict[str, str | None]) -> Iterator[None]:
     """Set each key of ``conf`` (a ``None`` value unsets it) while the
     body runs, then restore, in a ``finally``, the value each key had on
-    entry as read by ``spark.conf.get(key, None)``: a key that was unset
-    is unset again, not set to its default. An unset fallback key (one
-    whose default is another key's value, such as
-    ``advisoryPartitionSizeInBytes``) reads as its parent's value when
-    the parent is set, and is restored as set to that value.
+    entry: a key absent from ``spark.conf.getAll`` on entry is unset
+    again, not set to its default (nor, for a fallback key such as
+    ``advisoryPartitionSizeInBytes``, to its parent key's value).
 
     Session conf is session-global: a scope must not overlap a query
     started on the same session by other code. A streaming query
     already running is not affected, since it runs on a clone of the
     session made when it started."""
-    saved = {key: spark.conf.get(key, None) for key in conf}
+    set_now = spark.conf.getAll
+    saved = {key: set_now.get(key) for key in conf}
     try:
         _apply(spark, conf)
         yield

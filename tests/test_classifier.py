@@ -101,9 +101,7 @@ def test_first_gradient_round_hand_computed(spark):
     docs = _tiny_corpus(spark)
     got = {
         r.bucket: r.weight
-        for r in classifier.train_quality_classifier(
-            docs, iters=1, persist_intermediate=False
-        ).collect()
+        for r in classifier.train_quality_classifier(docs, iters=1).collect()
     }
     # teacher labels via the engine's own gate (pinned elsewhere);
     # everything downstream is hand arithmetic
@@ -180,9 +178,7 @@ def test_degenerate_single_class_unweighted_fallback(spark):
     divide by zero: weights finite, scores defined."""
     short = [(i, "tiny text", "en", "web") for i in range(5)]
     docs = spark.createDataFrame(short, ["doc_id", "text", "lang", "source"])
-    wts = classifier.train_quality_classifier(
-        docs, iters=2, persist_intermediate=False
-    )
+    wts = classifier.train_quality_classifier(docs, iters=2)
     vals = [r.weight for r in wts.collect()]
     assert len(vals) == QCLF_BUCKETS + 2
     assert all(np.isfinite(v) for v in vals)

@@ -224,9 +224,7 @@ def test_curation_pipeline_v3_stage_counts(spark):
     )
     n1 = quality.count()
     assert 0 < n1 <= n0
-    pairs = dedup.minhash_lsh_pairs(
-        quality, hash_family="md5", persist_intermediate=True
-    )
+    pairs = dedup.minhash_lsh_pairs(quality, hash_family="md5")
     comp = dedup.connected_components_star(pairs)
     survivors = (
         quality.join(F.broadcast(comp), "doc_id", "left")

@@ -4,12 +4,17 @@ with their exact counterparts on the fixture corpus."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import load_table
+from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import (
+    load_table,
+    table_path,
+)
 from etl_visualization_of_cryptocurrency_trading_data_spark.operators import (
     dedup,
     multimodal,
@@ -22,6 +27,19 @@ from conftest import SF_SMOKE
 @pytest.fixture(scope="module")
 def docs(spark):
     return load_table(spark, SF_SMOKE, "documents").cache()
+
+
+def private_copy(tmp_path, name):
+    """An sf dir holding a copy of one SF_SMOKE table: its relation is
+    new to the session, so no cache left by another test can match a
+    plan built over it."""
+    shutil.copy(table_path(SF_SMOKE, name), tmp_path)
+    return str(tmp_path)
+
+
+def has_cached_data(df):
+    plan = df._jdf.queryExecution().withCachedData().toString()
+    return "InMemoryRelation" in plan
 
 
 def pairs_set(df):
@@ -385,6 +403,36 @@ def test_kmeans_centroids_converges_to_cluster_means(spark):
     assert rows[1].n_members == 3 and rows[102].n_members == 3
     assert rows[1].cent == pytest.approx([1 / 3, 1 / 3])
     assert rows[102].cent == pytest.approx([31 / 3, 31 / 3])
+
+
+def test_knn_ivf_caches_the_assignment_only_for_passed_centroids(spark, tmp_path):
+    """Trained centroids carry their training subtree into both
+    consumers of the ranked assignment, so it is cached; sample
+    centroids are cheap and their identical subtrees hit
+    ReuseExchange, so it is not."""
+    emb = load_table(spark, private_copy(tmp_path, "embeddings"), "embeddings")
+    cents = similarity.kmeans_centroids(emb, iters=2)
+    assert has_cached_data(similarity.knn_ivf(emb, centroids=cents))
+    assert not has_cached_data(similarity.knn_ivf(emb))
+
+
+@pytest.mark.parametrize("name", ["dedup_survivors", "quality_survivors"])
+def test_survivors_queries_cache_the_posting_table(spark, tmp_path, name):
+    """Both survivors queries build their pair graph with
+    ngram_jaccard_pairs, which caches its posting table (four
+    consumers). The pair graph is checkpointed eagerly inside
+    connected_components_star, so the cache shows in the session's
+    cache manager, not in the returned plan."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.registry import (
+        QUERIES,
+    )
+
+    sf = private_copy(tmp_path, "documents")
+    QUERIES[name](spark, sf)
+    postings = dedup._shingle_postings(load_table(spark, sf, "documents"), 3)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(postings._jdf).isDefined()
+    postings.unpersist()
 
 
 def test_kmeans_requires_at_least_one_iter(spark):

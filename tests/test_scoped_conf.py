@@ -2,7 +2,8 @@
 also when the body raises: ``session.scoped_conf`` itself, the small-loop
 pin of the iterative operators, and the AQE skew probe. "As it found
 it" is read with ``spark.conf.get(key, None)``, so a key that was unset
-must be unset again, not set to its default."""
+must be unset again, not set to its default (nor, for a fallback key,
+to its parent key's value)."""
 
 from __future__ import annotations
 
@@ -18,6 +19,9 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.session import scope
 PARTITIONS = "spark.sql.shuffle.partitions"  # set by the test session
 AQE = "spark.sql.adaptive.enabled"  # set by the test session
 FACTOR = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"  # has a default
+# a fallback key: while unset it reads as its parent key's value
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+ADVISORY_PARENT = "spark.sql.adaptive.shuffle.targetPostShuffleInputSize"
 
 
 def _conf(spark, keys):
@@ -60,6 +64,16 @@ def test_scoped_conf_restores_when_body_raises(spark):
                 }
                 raise RuntimeError("body failed")
         assert _conf(spark, [PARTITIONS, FACTOR]) == before
+
+
+def test_scoped_conf_restores_unset_fallback_key_under_set_parent(spark):
+    with scoped_conf(spark, {ADVISORY: None, ADVISORY_PARENT: "1m"}):
+        assert ADVISORY not in spark.conf.getAll
+        assert spark.conf.get(ADVISORY, None) == "1m"
+        with scoped_conf(spark, {ADVISORY: "2m"}):
+            assert spark.conf.get(ADVISORY, None) == "2m"
+        assert ADVISORY not in spark.conf.getAll
+        assert spark.conf.get(ADVISORY, None) == "1m"
 
 
 @pytest.mark.parametrize(

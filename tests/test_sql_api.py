@@ -597,6 +597,38 @@ def test_conf_is_set_only_by_scoped_conf_and_load_table():
     assert found == allowed, f"conf pins outside scoped_conf: {found}"
 
 
+def test_no_function_takes_a_persist_switch():
+    """Self-policing sweep for cache switches: each materialization
+    boundary in the package is fixed in its function or worked out
+    from the input, never a ``persist_*`` parameter that callers flip.
+    A new hit means a boundary grew an on/off switch again."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_visualization_of_cryptocurrency_trading_data_spark",
+    )
+    found = []
+    for root, _, files in os.walk(pkg):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            for node in ast.walk(ast.parse(open(path).read())):
+                if not isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+                ):
+                    continue
+                a = node.args
+                for arg in [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]:
+                    if arg is not None and arg.arg.startswith("persist_"):
+                        found.append(
+                            f"{os.path.relpath(path, pkg)}:{node.lineno} {arg.arg}"
+                        )
+    assert found == [], f"persist switches: {found}"
+
+
 def test_plan_audit_pins_flagship_join_strategy(spark):
     """The flagship coin_table plan collapses all three fact tables to
     their latest row per (coin_id, exchange) in ONE grouping shuffle of

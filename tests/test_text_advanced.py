@@ -191,13 +191,6 @@ def test_curation_pipeline_stage_effects(spark):
     # the test doc itself remains
     assert set(out2) == {("test",)}
 
-    # persist_intermediate changes nothing
-    a = sorted(map(tuple, corpus.curation_pipeline(docs2).collect()))
-    b = sorted(
-        map(tuple, corpus.curation_pipeline(docs2, persist_intermediate=True).collect())
-    )
-    assert a == b
-
 
 # ---------------------------------------------------------------------------
 # bigram_logprob
